@@ -78,9 +78,9 @@ def entry(spark: SparkSession) -> DataFrame:
     (decontaminate_ref is exercised by tests/bench instead: a flagship
     ref corpus would be a modeling choice, not a smoke check)."""
     web = _web_pages_from_documents(spark, "/root/testdata/sf0.001")
-    # cache_intermediate=False: single-action path — a persist() here would
-    # pin the fat intermediate with no unpersist hook (the driver consumes
-    # the returned DataFrame)
+    # cache_intermediate=False: single-action path (the driver consumes
+    # the returned DataFrame); the chain stages still pin the extraction
+    # output once, as a GC-managed localCheckpoint
     res = run_pipeline(spark, web, output_dir=None, resume=False,
                        cache_intermediate=False, paragraph_dedup=True,
                        substring_dedup=True, repetition_filter=True,

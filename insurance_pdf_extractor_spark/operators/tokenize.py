@@ -1,7 +1,8 @@
 """Stage 2 — tokenize: document bytes → pages + byte-parity text.
 
-One ``mapInPandas`` stage (iterator-of-batches, Arrow transfer) covering
-T1-T9 per doc_kind (SURVEY.md §2.3):
+The per-document body of the tokenize stage, covering T1-T9 per
+doc_kind (SURVEY.md §2.3); it runs inside the fused tokenize+fields
+``mapInPandas`` stage (operators/fused.py):
 - pdf       → scanned-sniff refinement, then hybrid layout+raw extraction
               with recovery, or deterministic fake-OCR for scanned docs;
 - html      → boilerplate strip (T10);
@@ -15,12 +16,7 @@ opaque UDFs; SURVEY.md §7.3).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
 from .. import html_extract, textops
-from ..schemas import TOKENIZED
 
 _EMPTY = {"doc_kind": None, "text": "", "pages": [],
           "fallback_used": False, "recovered_claims": [], "error": None}
@@ -41,48 +37,3 @@ def _extract_one(kind0: str, html: bytes | None, text: str | None) -> dict:
     out["doc_kind"] = kind0
     out["error"] = None if kind0 == "empty" else "unrecognized format"
     return out
-
-
-def make_tokenize_fn(run_id: str):
-    def tokenize_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_cols: dict[str, list] = {k: [] for k in (
-                "url", "warc_ts", "lang", "doc_kind", "text", "pages",
-                "fallback_used", "recovered_claims", "error")}
-            for url, ts, html, text, lang, kind0, oversize in zip(
-                    pdf["url"], pdf["warc_ts"], pdf["html"], pdf["text"],
-                    pdf["lang"], pdf["doc_kind0"], pdf["oversize"]):
-                try:
-                    if oversize:
-                        res = dict(_EMPTY)
-                        res["doc_kind"] = "oversize"
-                        res["error"] = "document exceeds 50 MB cap"
-                    else:
-                        res = _extract_one(kind0, html, text)
-                except Exception as exc:  # never kill the partition
-                    res = dict(_EMPTY)
-                    res["doc_kind"] = f"{kind0}_error"
-                    res["error"] = f"{type(exc).__name__}: {exc}"
-                out_cols["url"].append(url)
-                out_cols["warc_ts"].append(ts)
-                out_cols["lang"].append(lang)
-                out_cols["doc_kind"].append(res["doc_kind"])
-                out_cols["text"].append(res["text"])
-                out_cols["pages"].append(res["pages"])
-                out_cols["fallback_used"].append(bool(res["fallback_used"]))
-                out_cols["recovered_claims"].append(
-                    list(res["recovered_claims"]))
-                out_cols["error"].append(res.get("error"))
-            yield pd.DataFrame(out_cols)
-    return tokenize_fn
-
-
-def tokenize(df, run_id: str, metrics_dir=None):
-    """(sniffed web_pages) → TOKENIZED DataFrame. Lineage emission lives
-    in the fused pipeline stage (operators/fused.py); this standalone
-    path is the unit-testable reference (metrics_dir accepted and
-    ignored for signature compatibility)."""
-    cols = ["url", "warc_ts", "html", "text", "lang", "doc_kind0",
-            "oversize"]
-    return df.select(*cols).mapInPandas(
-        make_tokenize_fn(run_id), schema=TOKENIZED)

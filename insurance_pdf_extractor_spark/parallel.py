@@ -15,8 +15,9 @@ ran 18.8 s at 1.1 busy cores on a 32-core host for exactly this
 reason).
 
 ``spread_input(df, key)`` hash-repartitions to the session's default
-parallelism IFF the DataFrame's physical plan contains no Exchange
-(i.e. its parallelism is still the scan's) and the plan currently
+parallelism IFF the DataFrame's physical plan contains no shuffle
+Exchange (i.e. its parallelism is still the scan's — a broadcast
+exchange only ships a small side and leaves it so) and the plan currently
 yields fewer partitions than cores. The key column keeps the shuffle
 deterministic under task retries (guide §2.5: never hash on rand());
 a unique id column gives a uniform spread. Cost when it fires: one
@@ -26,8 +27,21 @@ arrive in fewer splits than cores, that is by construction a few MB.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: a shuffle Exchange node in a physical-plan string; BroadcastExchange
+#: and ReusedExchange do not match
+_SHUFFLE_EXCHANGE = re.compile(r"\bExchange\b")
+
+
+def _has_shuffle(df: DataFrame) -> bool:
+    """Whether ``df``'s physical plan shuffles (raises if the plan
+    cannot be inspected)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return _SHUFFLE_EXCHANGE.search(plan) is not None
 
 
 def cluster_by(df: DataFrame, key: str, target: int | None = None
@@ -58,8 +72,7 @@ def cluster_by(df: DataFrame, key: str, target: int | None = None
             shuffle_p = 0
         n = max(spark.sparkContext.defaultParallelism, shuffle_p)
         try:
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            if "Exchange" not in plan:   # .rdd is safe: nothing to run
+            if not _has_shuffle(df):    # .rdd is safe: nothing to run
                 n = max(n, df.rdd.getNumPartitions())
         except Exception:
             pass
@@ -70,20 +83,20 @@ def spread_input(df: DataFrame, key: str | None = None,
                  target: int | None = None) -> DataFrame:
     """Repartition ``df`` to ``target`` (default: defaultParallelism)
     partitions when — and only when — its plan is scan-shaped (no
-    Exchange anywhere, so downstream parallelism is the scan's) and the
-    scan yields fewer partitions than that. Deterministic: hashes on
-    ``key`` when given, else on every column (row-content hash).
+    shuffle Exchange anywhere, so downstream parallelism is the scan's;
+    a broadcast join keeps it so) and the scan yields fewer partitions
+    than that. Deterministic: hashes on ``key`` when given, else on
+    every column (row-content hash).
 
-    Safe to call on derived DataFrames: if the plan already contains an
-    Exchange the function returns the input untouched *without*
+    Safe to call on derived DataFrames: if the plan already contains a
+    shuffle the function returns the input untouched *without*
     touching ``df.rdd`` (which, under AQE, would materialize upstream
     query stages just to count partitions).
     """
     try:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-    except Exception:       # plan not inspectable — change nothing
-        return df
-    if "Exchange" in plan:  # a shuffle already (re)distributes this data
+        if _has_shuffle(df):  # a shuffle already (re)distributes this data
+            return df
+    except Exception:         # plan not inspectable — change nothing
         return df
     sc = df.sparkSession.sparkContext
     if target is None:

@@ -2,32 +2,38 @@
 
     scan (url, warc_ts, html, text, lang)
       → anti-join vs committed output          # resumable re-runs
-      → repartitionByRange(N, xxhash64(url))   # skew kill / size balance
+      → repartition(N, xxhash64(url))          # skew kill / size balance
       → sniff     (native exprs)               # stage 1
-      → tokenize  (mapInPandas)                # stage 2 (+2b html)
-      → fields    (mapInPandas)                # stages 3+4
+      → tokenize+fields (ONE mapInPandas)      # stages 2-4, fused
       → finalize  (native explode/window/agg)  # stage 5
-      → opt-in gates: quality_min → paragraph_dedup → repetition_filter
-        → scrub → minhash dedup (the CCNet chain; each emits lineage)
-      → write claims, then docs (commit marker), metrics table per
-        (stage, partition)
+      → the opt-in stage list, in this order, each ending in a barrier:
+        quality → paradedup → substrdedup → repetition → decontam
+        → scrub → dedup (the CCNet chain)
+      → commit: metrics, claims, docs, signatures, ledger
 
 Exactly one wide dependency (the explicit repartition) before the UDF
-stages; finalize's groupBy/window shuffles hash on url, which AQE is free
+stage; finalize's groupBy/window shuffles hash on url, which AQE is free
 to coalesce. At cluster scale the parquet writes become Iceberg appends —
 the layout (output keyed by url + a metrics side-table) is unchanged.
 
+Both modes run the same stage list. Each stage ends in ONE barrier
+(:func:`_barrier`) whose observation counts the rows it keeps and
+rewrites — rows in is the previous stage's rows out, the first stage's
+observed on the fused staging write — so its lineage row costs no job.
+
 Commit ordering / crash safety (append-based resume):
-  1. staged delta parquet (snapshot isolation vs the self-read-write
-     hazard: the resume anti-join reads the same docs path the run
-     appends to);
-  2. metrics append (diagnostic — safe to have extra rows);
+  1. staged parquet: the fused UDF output and every stage barrier
+     (snapshot isolation vs the self-read-write hazard: the resume
+     anti-join reads the same docs path the run appends to);
+  2. ONE metrics append per run — the UDF's per-partition rows plus the
+     driver's per-stage rows (diagnostic — safe to have extra rows);
   3. claims append, itself anti-joined against already-committed claim
      urls (idempotent when a previous run crashed between 3 and 4);
   4. docs append — docs urls are the resume marker, so a crash
      anywhere before this leaves the delta uncommitted and the next run
      redoes it; claims can never be permanently lost for a committed doc;
-  5. ledger append (run_id, docs_total_after) — the next run's
+  5. signatures append (dedup on) — the delta's LSH band rows;
+  6. ledger append (run_id, docs_total_after) — the next run's
      committed_before is max() of this tiny table, never a file listing
      of the docs table.
 On a real cluster steps 3+4 become a single multi-table Iceberg
@@ -40,9 +46,10 @@ from __future__ import annotations
 import os
 import time
 import uuid
-from dataclasses import dataclass
+from collections.abc import Callable
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .dedup import (LSH_BANDS, _lsh_banded, dedup_documents,
@@ -67,10 +74,11 @@ class PipelineResult:
                             # (committed-before + this run's delta)
     wall_sec: float
     docs_delta: int = 0     # rows this run actually processed
-    cached: DataFrame | None = None  # no-output path pins the intermediate
+    cached: DataFrame | None = None  # no-output: the pinned UDF output
 
     def unpersist(self) -> None:
-        """Release the pinned intermediate (no-output runs only)."""
+        """Release ``cached`` if the caller cached it; the pinned
+        intermediate itself is a localCheckpoint, freed once unreferenced."""
         if self.cached is not None:
             self.cached.unpersist()
 
@@ -97,42 +105,23 @@ def _probe_committed_collisions(delta_bands: DataFrame,
             .select("doc_id").distinct())
 
 
-def _dedup_keepers(fields: DataFrame,
-                   band_staging: str | None,
-                   committed_bands: DataFrame | None = None
-                   ) -> tuple[DataFrame, DataFrame]:
-    """(keeper urls, dropped-band-overflow report) for the opt-in
-    minhash-lsh dedup stage: signatures → staged banding → connected
-    components → keeper election (min url per cluster, deterministic).
+def _dedup_keepers(run: _Run, keyed: DataFrame,
+                   committed_bands: DataFrame | None) -> DataFrame:
+    """Keeper doc_ids of the opt-in minhash-lsh dedup stage: signatures
+    → banding (behind a barrier) → connected components → keeper
+    election (min url per cluster, deterministic).
 
-    ``fields`` is a (url, text) view of the post-UDF intermediate —
-    after any text-quality rewrites (paragraph dedup / scrub), so
-    signatures hash the text that is actually committed — NOT the
-    finalize docs view: both carry the same (url, text), but the docs
-    view drags finalize's per-doc claim-aggregation joins into every
-    dedup branch (signature build, cluster ids, keeper join) — reading
-    the 2-column projection straight off the staged intermediate keeps
-    those branches at scan cost.
-
-    The staged artifact is the BANDED table (doc_id, band_no, bh) — the
-    one format every consumer needs: the candidate self-join, the
-    overflow report, the cross-run history probe, and the committed
-    ``signatures/`` append all read it, so banding's explode+md5 runs
-    exactly once per delta and never over history.
-
-    Scope: dedup runs WITHIN the current run's delta (new urls only) —
-    already-committed docs are not re-clustered; cross-run dedup over
-    the full committed table is tools/dedup_job.py's job. Without an
-    output dir the keyed projection is localCheckpointed instead
-    (GC-managed — no cache-slot leak to track in PipelineResult)."""
-    keyed = fields.select(F.col("url").alias("doc_id"), "text")
-    if band_staging is None:
-        keyed = keyed.localCheckpoint()
-    banded = _lsh_banded(minhash_signatures_from_docs(keyed))
-    if band_staging is not None:
-        banded.write.mode("overwrite").parquet(band_staging)
-        banded = keyed.sparkSession.read.parquet(band_staging)
-    pairs = lsh_pairs_from_banded(banded)
+    ``keyed`` is the chain's (doc_id, text) view, after any rewrite, so
+    signatures hash the committed text. The barrier holds the BANDED
+    table (doc_id, band_no, bh), the one format every consumer needs —
+    the candidate self-join, the overflow report, the history probe and
+    the ``signatures/`` append all read ``run.banded`` — so banding's
+    explode+md5 runs once per delta and never over history. Clusters
+    form WITHIN the delta; re-clustering the committed table is
+    tools/dedup_job.py's job."""
+    run.banded, _ = _barrier(
+        run, _lsh_banded(minhash_signatures_from_docs(keyed)), "sig")
+    pairs = lsh_pairs_from_banded(run.banded)
     verdict = dedup_documents(keyed.select("doc_id"), pairs)
     if committed_bands is not None:
         # CROSS-RUN dedup: a delta doc colliding with history is a
@@ -140,14 +129,12 @@ def _dedup_keepers(fields: DataFrame,
         # maps onto the committed keeper, so every member drops
         # (cluster = connected component; one member touching a
         # committed doc connects the component to it).
-        collided = _probe_committed_collisions(banded, committed_bands)
+        collided = _probe_committed_collisions(run.banded, committed_bands)
         dropped_clusters = (verdict.join(collided, "doc_id", "left_semi")
                             .select("cluster_id").distinct())
         verdict = verdict.join(dropped_clusters, "cluster_id",
                                "left_anti")
-    keepers = (verdict.where(F.col("is_keeper"))
-               .select(F.col("doc_id").alias("url")))
-    return keepers, lsh_band_overflow_from_banded(banded)
+    return verdict.where(F.col("is_keeper")).select("doc_id")
 
 
 #: error conditions meaning "no table here" (vs corrupt-table errors,
@@ -193,31 +180,26 @@ def _hadoop_rm(spark: SparkSession, path: str) -> None:
 
 
 def _recover_parked_signatures(spark: SparkSession,
-                               output_dir: str) -> bool:
-    """Restore a half-swapped signature compaction (ADVICE r7): when a
-    ``tools/dedup_job.py --compact-signatures`` crashed between its two
-    renames, ``signatures/`` is absent and the whole cross-run history
-    is parked at ``signatures_precompact/``. Any reader that treats
-    that state as "no history" forecloses the job-level recovery (its
-    own guard keys on ``signatures/`` being absent), so the pipeline
-    restores the parked copy itself before reading. Same rename the
-    job's ``_recover_half_swapped`` performs; returns True when it
-    repaired. Errors restoring RAISE — proceeding would silently drop
-    the entire dedup history."""
+                               output_dir: str) -> None:
+    """Restore a half-swapped signature compaction (ADVICE r7): a
+    ``tools/dedup_job.py --compact-signatures`` that crashed between its
+    two renames leaves ``signatures/`` absent and the history parked at
+    ``signatures_precompact/``, which the job's own recovery (keyed on
+    ``signatures/`` being absent) stops restoring once a run writes a
+    fresh ``signatures/``. Same rename as the job's
+    ``_recover_half_swapped``; a failed restore RAISES."""
     jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     Path = jvm.org.apache.hadoop.fs.Path
     sig = Path(os.path.join(output_dir, "signatures"))
     parked = Path(os.path.join(output_dir, "signatures_precompact"))
     fs = sig.getFileSystem(hconf)
-    if not fs.exists(sig) and fs.exists(parked):
-        if not fs.rename(parked, sig):
-            raise RuntimeError(
-                f"could not restore parked signature history "
-                f"{parked} -> {sig}; refusing to proceed with an "
-                f"empty-looking cross-run dedup store")
-        return True
-    return False
+    if (not fs.exists(sig) and fs.exists(parked)
+            and not fs.rename(parked, sig)):
+        raise RuntimeError(
+            f"could not restore parked signature history "
+            f"{parked} -> {sig}; refusing to proceed with an "
+            f"empty-looking cross-run dedup store")
 
 
 _LEDGER_SCHEMA = "run_id string, docs_total_after long"
@@ -233,13 +215,11 @@ def _ledger_committed(spark: SparkSession, ledger_path: str,
     Fallbacks: docs table absent/empty → 0 (a wiped table invalidates the
     ledger); ledger ABSENT but docs present (pre-ledger output dir) → one
     footer-metadata-only count of the docs table. A ledger that exists
-    but cannot be read RAISES (same rule as the docs table itself — a
-    corrupt ledger silently triggering the expensive full count it exists
-    to avoid was ADVICE r3). Known narrow window: a crash BETWEEN the
-    docs append and the ledger append under-counts that run's delta until
-    the next committed run — at cluster scale both appends join one
-    Iceberg transaction and the ledger is the snapshot's row-count
-    property."""
+    but cannot be read RAISES (ADVICE r3: a corrupt ledger must not
+    silently trigger the full count it exists to avoid). Known window: a
+    crash BETWEEN the docs and ledger appends under-counts that delta
+    until the next committed run (at cluster scale both join one
+    Iceberg transaction)."""
     if docs_committed is None:
         return 0
     ledger = _read_table_if_exists(spark, ledger_path)
@@ -247,6 +227,83 @@ def _ledger_committed(spark: SparkSession, ledger_path: str,
         row = ledger.agg(F.max("docs_total_after")).first()
         return int(row[0] or 0)
     return docs_committed.count()
+
+
+@dataclass
+class _Run:
+    """What one run_pipeline call's barriers share with its commit."""
+    spark: SparkSession
+    run_id: str
+    output_dir: str | None
+    pin_fields: bool              # no output dir: checkpoint the UDF output
+    staged: list[str] = field(default_factory=list)  # removed after commit
+    banded: DataFrame | None = None  # the dedup stage's LSH band rows
+
+
+def _barrier(run: _Run, df: DataFrame, stage: str | None,
+             **counts: Column) -> tuple[DataFrame, Observation | None]:
+    """Materialize ``df`` once for all its consumers, counting it on the
+    way: (materialized frame, Observation of ``rows`` plus one count per
+    ``counts`` predicate), filled by the materializing action itself.
+    With an output dir: parquet at ``_staging/<run_id>_<stage>``
+    (``stage=None``: the fused UDF output, ``_staging/<run_id>``), read
+    back with its known schema and removed after commit. Without one: a
+    GC-managed localCheckpoint — except the UDF output of a run that
+    pins nothing, which stays a plan for a single-action caller."""
+    if run.output_dir is None and stage is None and not run.pin_fields:
+        return df, None
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("rows"),
+                    *[F.count(F.when(c, 1)).alias(k)
+                      for k, c in counts.items()])
+    if run.output_dir is None:
+        return df.localCheckpoint(), obs
+    path = os.path.join(run.output_dir, "_staging",
+                        run.run_id if stage is None
+                        else f"{run.run_id}_{stage}")
+    df.write.mode("overwrite").parquet(path)
+    run.staged.append(path)
+    return run.spark.read.schema(df.schema).parquet(path), obs
+
+
+@dataclass(frozen=True, eq=False)
+class _Stage:
+    """One opt-in chain stage. ``build`` maps the chain's (url, text)
+    view and finalize's docs view to either the urls the stage keeps
+    (a gate: ``touched`` is None) or the rewritten (url, text, *audit)
+    rows, where ``touched`` marks the rows it changed."""
+    name: str
+    build: Callable[[DataFrame, DataFrame], DataFrame]
+    touched: Column | None = None
+
+    def apply(self, run: _Run, textv: DataFrame, docs: DataFrame
+              ) -> tuple[DataFrame, DataFrame | None, dict]:
+        """(new text view, audit columns or None, the barrier's counts)."""
+        out, obs = _barrier(run, self.build(textv, docs), self.name, **(
+            {} if self.touched is None else {"touched": self.touched}))
+        if self.touched is None:
+            return textv.join(out, "url", "left_semi"), None, obs.get
+        return out.select("url", "text"), out.drop("text"), obs.get
+
+
+def _keyed(textv: DataFrame) -> DataFrame:
+    return textv.select(F.col("url").alias("doc_id"), "text")
+
+
+def _gate(name: str, keepers: Callable[[DataFrame], DataFrame]) -> _Stage:
+    """A stage keeping the doc_ids ``keepers`` returns for (doc_id, text)."""
+    return _Stage(name, lambda textv, docs: keepers(_keyed(textv)).select(
+        F.col("doc_id").alias("url")))
+
+
+def _rewrite(name: str, rewriter: Callable[[DataFrame], DataFrame],
+             touched: Column, **audit: str) -> _Stage:
+    """A stage replacing ``text`` by the ``text_kept`` column ``rewriter``
+    returns for (doc_id, text), plus the ``audit`` columns (docs-table
+    name = rewriter column)."""
+    return _Stage(name, lambda textv, docs: rewriter(_keyed(textv)).select(
+        F.col("doc_id").alias("url"), F.col("text_kept").alias("text"),
+        *[F.col(src).alias(dst) for dst, src in audit.items()]), touched)
 
 
 def run_pipeline(spark: SparkSession, web_pages: DataFrame,
@@ -266,117 +323,75 @@ def run_pipeline(spark: SparkSession, web_pages: DataFrame,
                  decontaminate_ref: DataFrame | None = None,
                  decontaminate_ngram: int = 13,
                  scrub: bool = False) -> PipelineResult:
-    """Run the 5-stage extraction over a web_pages DataFrame.
+    """Run the 5-stage extraction, then the enabled chain stages, over a
+    web_pages DataFrame.
 
-    output_dir: if set, writes ``claims/`` + ``docs/`` parquet (append)
-    and a Spark-written ``metrics/`` lineage table; re-runs anti-join
-    committed urls first (idempotent — north_rule resumability).
-
-    dedup: ``None`` (default — output unchanged) or ``"minhash-lsh"``:
-    an opt-in stage between finalize and the output appends that routes
-    the extracted docs through MinHash signatures → staged LSH banding →
-    connected-components keeper election, then keeps only keeper urls in
-    BOTH the docs and claims outputs (a dropped duplicate contributes no
-    claims either). Emits ``stage='dedup'`` lineage rows (doc_count =
-    keepers, fail_count = duplicates removed) plus a
-    ``dedup_bands_dropped`` row reporting hot band buckets the
-    candidate join capped. With an ``output_dir``, dedup is CROSS-RUN:
-    a ``signatures/`` table accumulates the PRE-BANDED LSH rows
-    (doc_id, band_no, bh) of every doc ever seen (keepers and dropped),
-    partitioned by band_no; each delta is judged against that history
-    via one equi-join — the banding explode never re-runs over history,
-    so an incremental run's probe cost follows the DELTA size, not the
-    committed-table size (VERDICT r4 item 1). A resume that re-offers a
-    dropped duplicate drops it again — identical input re-fed with
-    dedup on is idempotent. Keep ``dedup`` consistently on (or off) for
-    a given output dir: non-dedup runs don't record signatures, so
-    their docs are invisible to later dedup runs until
-    ``tools/dedup_job.py --backfill-signatures`` bands the committed
-    table once (idempotent — already-banded urls are skipped). Without
-    an output dir, scope is the single in-memory batch. Retroactive
-    dedup of an existing committed table remains tools/dedup_job.py;
-    periodic small-file compaction of ``signatures/`` is
-    ``--compact-signatures``.
-
-    quality_min: training-data quality gate — drop docs whose
-    ``completeness_score`` falls below the threshold (and their
-    claims). Emits a ``stage='quality'`` lineage row (doc_count = kept,
-    fail_count = dropped). A dropped doc is not committed, so a resume
-    re-extracts and re-drops it — idempotent, deterministic. The gate
-    runs BEFORE dedup signature staging: a quality-dropped doc's
-    content never reaches the output, so its signature must not enter
-    the cross-run history either (it would silently drop a later,
-    quality-passing near-dup whose content was never preserved —
-    ADVICE r4).
+    output_dir: if set, appends ``claims/`` + ``docs/`` parquet, one
+    ``metrics/`` lineage file and one ``ledger/`` row per run; re-runs
+    anti-join committed urls first (idempotent — north_rule
+    resumability). Without it the docs/claims views are returned
+    unwritten; ``cache_intermediate`` (or any chain stage) then pins the
+    extraction output with a localCheckpoint so every consumer reads it
+    once, while ``cache_intermediate=False`` with no chain stage leaves
+    the whole run a plan for a single-action caller.
 
     partition_output_by_date: partition the docs table by
     ``crawl_date = date(warc_ts)`` — the 100 TB layout (an Iceberg
     identity/day partition spec): readers prune whole crawl days, and
-    appends only touch the days present in the delta. Off by default so
-    small-corpus outputs stay single-directory. The resume anti-join is
-    layout-independent (it reads only ``url``).
+    appends only touch the days present in the delta. The resume
+    anti-join is layout-independent (it reads only ``url``).
 
-    paragraph_dedup / repetition_filter / scrub (r7 — VERDICT r6 items
-    1/4): the CCNet-style text-quality chain, opt-in stages that run
-    AFTER the quality gate and BEFORE minhash dedup, in this order:
+    The opt-in chain stages, in order. Each writes one lineage row: a
+    gate's doc_count = kept, fail_count = dropped; a rewrite's
+    doc_count = docs, fail_count = docs it changed. Gated docs (and
+    claims) are never committed, so a resume re-extracts and re-drops
+    them. Keep the rewrite flags consistent per output dir: they add
+    docs-table columns (guarded, like the date layout).
 
-    1. ``paragraph_dedup`` — corpus-wide line-level boilerplate removal
-       (:func:`dedup.dedup_paragraphs`): docs' ``text`` is REWRITTEN to
-       the surviving paragraphs and the docs table gains
-       ``paras_total`` / ``paras_dropped``. CCNet order matters: a
-       banner-stripped doc produces different (better) MinHash
-       signatures, so this precedes the dedup stage. SCOPE IS THE
-       DELTA: the duplicated-paragraph list is computed over the
-       current run's new docs only — cross-RUN boilerplate (a banner
-       whose occurrences are spread one-per-run) is not accumulated,
-       unlike minhash's cross-run ``signatures/`` store. That is a
-       deliberate semantic: committed docs' text is immutable
-       (rewriting history on every run would make resume/lineage
-       meaningless), so a committed-scope variant must instead carry a
-       (paragraph-hash, count) side table that future runs CONSULT but
-       never retro-apply — the extension slot is documented in
-       COVERAGE.md, and within-run determinism is what resume
-       idempotency actually needs: a crash-resume re-derives the hot
-       list from the REMAINING delta, so a re-offered doc is judged
-       against its own run's corpus, never double-scrubbed (its
-       committed copy is skipped by the resume anti-join).
-    1b. ``substring_dedup`` — corpus-wide exact duplicated-substring
-       removal (:func:`dedup.dedup_substrings`, Lee et al. 2022):
-       every ``substring_k``-word span occurring twice in the run's
-       corpus is cut from all its hosts and the docs table gains
-       ``substr_words_removed`` / ``substr_spans_removed``. Runs AFTER
-       paragraph dedup (line-exact boilerplate is cheaper to kill at
-       line granularity) and BEFORE the repetition gate and minhash —
-       same DELTA scope and same immutable-history rationale as
-       paragraph_dedup.
-    2. ``repetition_filter`` — the Gopher §A1.1 repetition gate
-       (:func:`scrub.gopher_repetition_keepers`): drops docs whose
-       duplicate-line / top-n-gram / duplicated-n-gram fractions
-       exceed the published thresholds, AFTER boilerplate stripping
-       (a nav banner must not fail an otherwise-clean page). Dropped
-       docs (and their claims) are not committed — resume re-extracts
-       and re-drops them, like ``quality_min``.
-    2b. ``decontaminate_ref`` — eval-set decontamination
-       (:func:`scrub.decontaminate_keepers`, the GPT-3 13-gram rule):
-       pass a DataFrame with a ``text`` column holding the benchmark /
-       eval corpus; any doc sharing >= 1 ``decontaminate_ngram``-word
-       window with it is dropped (with its claims), lineage stage
-       'decontam'. The reference side broadcasts as distinct window
-       hashes, so eval sets of ordinary size cost the extraction
-       pipeline no extra shuffle. Like the repetition gate, dropped
-       docs are never committed — resume re-extracts and re-drops.
-       Schema-neutral (drops rows, adds no columns), so no flag guard.
-    3. ``scrub`` — typed PII redaction (:func:`scrub.scrub_pii`):
-       ``text`` is rewritten with the redaction tokens and the docs
-       table gains the ``pii_counts`` audit map. Deterministic per
-       doc — resume-idempotent. Runs LAST so minhash signatures (and
-       the cross-run signature history) hash exactly the text that is
-       committed.
-
-    Each stage emits its own lineage row (stage = 'paradedup' /
-    'repetition' / 'scrub'). Keep these flags consistent per output
-    dir — the docs-table schema differs with them (guarded, like the
-    date-partition layout).
+    1. ``quality_min`` ('quality') — drop docs whose
+       ``completeness_score`` is below it. First: a dropped doc's
+       signature must not enter the dedup history either (it would
+       silently drop a later, quality-passing near-dup — ADVICE r4).
+    2. ``paragraph_dedup`` ('paradedup') — corpus-wide line-level
+       boilerplate removal (:func:`dedup.dedup_paragraphs`): ``text``
+       is rewritten to the surviving paragraphs; adds ``paras_total`` /
+       ``paras_dropped``. Before minhash, because a banner-stripped doc
+       gets different (better) signatures. SCOPE IS THE DELTA (new docs
+       of this run only): committed text is immutable, so a
+       committed-scope variant would carry a (paragraph-hash, count)
+       side table future runs consult but never retro-apply
+       (COVERAGE.md). A crash-resume re-derives the list from the
+       REMAINING delta, and committed copies are skipped by the resume
+       anti-join, so nothing is scrubbed twice.
+    3. ``substring_dedup`` ('substrdedup') — every ``substring_k``-word
+       span occurring twice in the run's corpus is cut from all its
+       hosts (:func:`dedup.dedup_substrings`, Lee et al. 2022); adds
+       ``substr_words_removed`` / ``substr_spans_removed``. After
+       paragraph dedup (line-exact boilerplate is cheaper to kill per
+       line); same DELTA scope.
+    4. ``repetition_filter`` ('repetition') — the Gopher §A1.1 gate
+       (:func:`scrub.gopher_repetition_keepers`), after boilerplate
+       stripping so a nav banner cannot fail an otherwise-clean page.
+    5. ``decontaminate_ref`` ('decontam') — drop every doc sharing a
+       ``decontaminate_ngram``-word window with this DataFrame's
+       ``text`` column (:func:`scrub.decontaminate_keepers`, the GPT-3
+       13-gram rule). The reference broadcasts as distinct window
+       hashes: no extra shuffle for eval sets of ordinary size.
+    6. ``scrub`` ('scrub') — typed PII redaction
+       (:func:`scrub.scrub_pii`): ``text`` is rewritten; adds the
+       ``pii_counts`` audit map. The last rewrite, so minhash
+       signatures hash exactly the committed text.
+    7. ``dedup="minhash-lsh"`` ('dedup', plus a 'dedup_bands_dropped'
+       row counting hot band buckets the candidate join capped) —
+       MinHash → LSH banding → connected-components keeper election;
+       only keepers reach docs and claims. With an output dir dedup is
+       CROSS-RUN: ``signatures/`` accumulates the pre-banded rows
+       (doc_id, band_no, bh) of every doc that reached the stage, and
+       each delta is judged against it by one equi-join — probe cost
+       follows the DELTA size (VERDICT r4 item 1), and a re-offered
+       dropped duplicate drops again. Keep ``dedup`` consistent per
+       output dir: docs of non-dedup runs stay invisible to the probe
+       until ``tools/dedup_job.py --backfill-signatures``.
     """
     # argument validation BEFORE any write (ADVICE r4: a typo'd dedup
     # arg must not leave partial run state behind)
@@ -390,26 +405,55 @@ def run_pipeline(spark: SparkSession, web_pages: DataFrame,
         raise ValueError(f"substring_k must be >= 2, got {substring_k}")
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.monotonic()
-    metrics_path = os.path.join(output_dir, "metrics") if output_dir else None
-    docs_path = os.path.join(output_dir, "docs") if output_dir else None
-    claims_path = os.path.join(output_dir, "claims") if output_dir else None
 
+    # the committed snapshot this run appends to: listings are fixed at
+    # DataFrame creation, before any same-run append
     df = web_pages
     committed_before = 0
-    committed_docs = None
-    if docs_path:
+    committed_claims = committed_bands = None
+    if output_dir:
+        docs_path = os.path.join(output_dir, "docs")
         committed_docs = _read_table_if_exists(spark, docs_path)
         committed = (committed_docs.select("url")
                      if committed_docs is not None else None)
+        # refuse, BEFORE any write, a delta of another layout or schema:
+        # the other date layout makes a mix Spark cannot read (a
+        # swallowed read error would then silently disable resume);
+        # other flag columns make a mixed-footer table whose reads drop
+        # or null them. crawl_date surfaces as a partition-discovery
+        # column — an object-storage-safe probe, unlike a listing.
+        for col, flag, opt in (
+                ("crawl_date", partition_output_by_date,
+                 "partition_output_by_date"),
+                ("pii_counts", scrub, "scrub"),
+                ("paras_total", paragraph_dedup, "paragraph_dedup"),
+                ("substr_words_removed", substring_dedup,
+                 "substring_dedup")):
+            if (committed_docs is not None
+                    and (col in committed_docs.columns) != flag):
+                raise ValueError(
+                    f"docs table at {docs_path} was written with "
+                    f"{opt}={not flag} but this run passed {opt}={flag}"
+                    f" — keep the flag consistent per output dir")
         # cumulative count comes from the run ledger, computed whenever
         # the output table exists (ADVICE r2: a non-resume run against an
         # existing dir must not under-report docs_written) — never a
         # file-listing of the committed docs table
-        ledger_path = os.path.join(output_dir, "ledger")
-        committed_before = _ledger_committed(spark, ledger_path, committed)
+        committed_before = _ledger_committed(
+            spark, os.path.join(output_dir, "ledger"), committed)
         if resume and committed is not None:
             # J1 pattern at run granularity: skip already-extracted urls
             df = df.join(committed, "url", "left_anti")
+        claims_path = os.path.join(output_dir, "claims")
+        committed_claims = _read_table_if_exists(spark, claims_path)
+        if dedup is not None:
+            # the cross-run dedup history. Restore a half-swapped
+            # compaction first (ADVICE r7): reading "no history" would
+            # write a fresh delta-only signatures/, after which the
+            # job-level recovery never restores the parked history.
+            _recover_parked_signatures(spark, output_dir)
+            committed_bands = _read_table_if_exists(
+                spark, os.path.join(output_dir, "signatures"))
 
     if num_partitions is None:
         num_partitions = max(spark.sparkContext.defaultParallelism * 2, 8)
@@ -429,416 +473,121 @@ def run_pipeline(spark: SparkSession, web_pages: DataFrame,
                 .repartition(num_partitions, "_url_hash")
                 .drop("_url_hash"))
 
-    sniffed = sniff(df)
+    stages = [stage for enabled, stage in (
+        (quality_min is not None, _Stage(
+            "quality", lambda textv, docs: docs.where(
+                F.col("completeness_score") >= quality_min).select("url"))),
+        (paragraph_dedup, _rewrite(
+            "paradedup", dedup_paragraphs, F.col("paras_dropped") > 0,
+            paras_total="paras_total", paras_dropped="paras_dropped")),
+        (substring_dedup, _rewrite(
+            "substrdedup", lambda d: dedup_substrings(d, k=substring_k),
+            F.col("substr_words_removed") > 0,
+            substr_words_removed="words_removed",
+            substr_spans_removed="spans_removed")),
+        (repetition_filter, _gate("repetition", gopher_repetition_keepers)),
+        (decontaminate_ref is not None, _gate(
+            "decontam", lambda d: decontaminate_keepers(
+                d, decontaminate_ref, n=decontaminate_ngram))),
+        (scrub, _rewrite(
+            "scrub", lambda d: scrub_pii(d, out_col="text_kept"),
+            F.exists(F.map_values("pii_counts"), lambda v: v > 0),
+            pii_counts="pii_counts")),
+        (dedup is not None, _gate(
+            "dedup", lambda d: _dedup_keepers(run, d, committed_bands))),
+    ) if enabled]
+    # a chain fans the UDF output out to several consumers: pin it even
+    # without cache_intermediate, so the extraction runs once
+    run = _Run(spark, run_id, output_dir,
+               pin_fields=cache_intermediate or bool(stages))
     # tokenize + fields run FUSED (one Arrow crossing for the fat text /
-    # pages columns) while still emitting separate per-stage lineage rows
-    # (embedded sentinel rows — see lineage.py)
-    fields_df = tokenize_and_extract(sniffed, run_id,
-                                     emit_metrics=bool(output_dir))
+    # pages columns), emitting per-stage lineage as sentinel rows
+    # (lineage.py). The pinned output serves both finalize branches and
+    # isolates this run from its own appends (module doc).
+    pinned, fused_obs = _barrier(
+        run, tokenize_and_extract(sniff(df), run_id, emit_metrics=True),
+        None, docs=F.col("_metric").isNull())
+    fields, udf_metrics = split_metrics(pinned)
+    claims, docs = finalize(fields)
 
-    if output_dir:
-        # Materialize the post-UDF intermediate BEFORE appending outputs:
-        # 1. the docs/claims DAGs both branch off fields_df — without a
-        #    materialization the UDF stages re-execute per consumer;
-        # 2. snapshot isolation for the resume anti-join (see module doc).
-        staging = os.path.join(output_dir, "_staging", run_id)
-        fields_df.write.mode("overwrite").parquet(staging)
-        staged = spark.read.parquet(staging)
-        fields, metrics_delta = split_metrics(staged)
-        metrics_delta.write.mode("append").parquet(metrics_path)
-
-        claims, docs = finalize(fields)
-        docs_delta = None
-        # quality gate FIRST (ADVICE r4): a quality-dropped doc's
-        # content is never committed, so it must not reach dedup's
-        # signature staging either — otherwise its recorded signature
-        # drops a later quality-passing near-dup whose content then
-        # never enters the corpus at all
-        if quality_min is not None:
-            t_q = time.monotonic()
-            n_before = fields.count()       # footer-metadata-only count
-            docs = docs.where(F.col("completeness_score") >= quality_min)
-            claims = claims.join(docs.select("url"), "url", "left_semi")
-            n_after = docs.count()
-            docs_delta = n_after
-            q_ms = int((time.monotonic() - t_q) * 1000)
-            spark.createDataFrame(
-                [(run_id, "quality", -1, n_after, 0,
-                  n_before - n_after, q_ms, 0)],
-                "run_id string, stage string, partition_id int, "
-                "doc_count long, bytes long, fail_count long, "
-                "wall_ms long, attempt int"
-            ).coalesce(1).write.mode("append").parquet(metrics_path)
-        # --- CCNet text-quality chain (r7): paragraph dedup →
-        # repetition gate → PII scrub, all over the (url, text)
-        # projection of the staged intermediate (column-pruned scan;
-        # finalize's claim-agg joins never enter these branches), all
-        # BEFORE minhash so signatures hash the committed text.
-        textv = fields.select("url", "text")
-        if quality_min is not None:
-            textv = textv.join(docs.select("url"), "url", "left_semi")
-        para_staging_path = None
-        para_info = None
-        if paragraph_dedup:
-            t_pp = time.monotonic()
-            pd_res = dedup_paragraphs(
-                textv.select(F.col("url").alias("doc_id"), "text"))
-            # staged: the corpus-wide agg feeds three consumers
-            # (repetition gate / scrub / the docs-table text join)
-            para_staging_path = os.path.join(output_dir, "_staging",
-                                             run_id + "_para")
-            pd_res.write.mode("overwrite").parquet(para_staging_path)
-            pd_res = spark.read.parquet(para_staging_path).select(
-                F.col("doc_id").alias("url"),
-                F.col("text_kept").alias("text"),
-                "paras_total", "paras_dropped")
-            textv = pd_res.select("url", "text")
-            para_info = pd_res.select("url", "paras_total",
-                                      "paras_dropped")
-            st = pd_res.agg(
-                F.count("*").alias("n"),
-                F.count(F.when(F.col("paras_dropped") > 0, 1))
-                .alias("touched")).first()
-            spark.createDataFrame(
-                [(run_id, "paradedup", -1, int(st["n"]), 0,
-                  int(st["touched"]),
-                  int((time.monotonic() - t_pp) * 1000), 0)],
-                "run_id string, stage string, partition_id int, "
-                "doc_count long, bytes long, fail_count long, "
-                "wall_ms long, attempt int"
-            ).coalesce(1).write.mode("append").parquet(metrics_path)
-        substr_info = None
-        ss_staging_path = None
-        if substring_dedup:
-            t_ss = time.monotonic()
-            ss_res = dedup_substrings(
-                textv.select(F.col("url").alias("doc_id"), "text"),
-                k=substring_k)
-            # staged like paragraph dedup: the corpus-wide dup-window
-            # agg feeds every downstream consumer once
-            ss_staging_path = os.path.join(output_dir, "_staging",
-                                           run_id + "_substr")
-            ss_res.write.mode("overwrite").parquet(ss_staging_path)
-            ss_res = spark.read.parquet(ss_staging_path).select(
-                F.col("doc_id").alias("url"),
-                F.col("text_kept").alias("text"),
-                F.col("words_removed").alias("substr_words_removed"),
-                F.col("spans_removed").alias("substr_spans_removed"))
-            textv = ss_res.select("url", "text")
-            substr_info = ss_res.select("url", "substr_words_removed",
-                                        "substr_spans_removed")
-            st = ss_res.agg(
-                F.count("*").alias("n"),
-                F.count(F.when(F.col("substr_words_removed") > 0, 1))
-                .alias("touched")).first()
-            spark.createDataFrame(
-                [(run_id, "substrdedup", -1, int(st["n"]), 0,
-                  int(st["touched"]),
-                  int((time.monotonic() - t_ss) * 1000), 0)],
-                "run_id string, stage string, partition_id int, "
-                "doc_count long, bytes long, fail_count long, "
-                "wall_ms long, attempt int"
-            ).coalesce(1).write.mode("append").parquet(metrics_path)
-        if repetition_filter:
-            t_rg = time.monotonic()
-            n_in = (docs_delta if docs_delta is not None
-                    else fields.count())
-            kept = gopher_repetition_keepers(
-                textv.select(F.col("url").alias("doc_id"), "text")
-            ).select(F.col("doc_id").alias("url")).localCheckpoint()
-            n_keep = kept.count()
-            docs = docs.join(kept, "url", "left_semi")
-            claims = claims.join(kept, "url", "left_semi")
-            textv = textv.join(kept, "url", "left_semi")
-            docs_delta = n_keep
-            spark.createDataFrame(
-                [(run_id, "repetition", -1, n_keep, 0, n_in - n_keep,
-                  int((time.monotonic() - t_rg) * 1000), 0)],
-                "run_id string, stage string, partition_id int, "
-                "doc_count long, bytes long, fail_count long, "
-                "wall_ms long, attempt int"
-            ).coalesce(1).write.mode("append").parquet(metrics_path)
-        if decontaminate_ref is not None:
-            t_dc = time.monotonic()
-            n_in = (docs_delta if docs_delta is not None
-                    else fields.count())
-            kept = decontaminate_keepers(
-                textv.select(F.col("url").alias("doc_id"), "text"),
-                decontaminate_ref, n=decontaminate_ngram
-            ).select(F.col("doc_id").alias("url")).localCheckpoint()
-            n_keep = kept.count()
-            docs = docs.join(kept, "url", "left_semi")
-            claims = claims.join(kept, "url", "left_semi")
-            textv = textv.join(kept, "url", "left_semi")
-            docs_delta = n_keep
-            spark.createDataFrame(
-                [(run_id, "decontam", -1, n_keep, 0, n_in - n_keep,
-                  int((time.monotonic() - t_dc) * 1000), 0)],
-                "run_id string, stage string, partition_id int, "
-                "doc_count long, bytes long, fail_count long, "
-                "wall_ms long, attempt int"
-            ).coalesce(1).write.mode("append").parquet(metrics_path)
-        pii_info = None
-        if scrub:
-            t_sc = time.monotonic()
-            # localCheckpoint before fanning out (ADVICE r7): the
-            # scrubbed text feeds THREE consumers (this metrics agg,
-            # the docs text-rewrite join, and the minhash signature
-            # build when dedup is on) — unstaged, the full PII
-            # regexp_replace chain re-executes once per consumer
-            sc = scrub_pii(textv).localCheckpoint()
-            textv = sc.select("url",
-                              F.col("text_scrubbed").alias("text"))
-            pii_info = sc.select("url", "pii_counts")
-            st = sc.agg(
-                F.count("*").alias("n"),
-                F.count(F.when(
-                    F.exists(F.map_values("pii_counts"),
-                             lambda v: v > 0), 1)).alias("touched")
-            ).first()
-            spark.createDataFrame(
-                [(run_id, "scrub", -1, int(st["n"]), 0, int(st["touched"]),
-                  int((time.monotonic() - t_sc) * 1000), 0)],
-                "run_id string, stage string, partition_id int, "
-                "doc_count long, bytes long, fail_count long, "
-                "wall_ms long, attempt int"
-            ).coalesce(1).write.mode("append").parquet(metrics_path)
-        if paragraph_dedup or substring_dedup or scrub:
-            # one text-rewrite join into the docs view (equal url sets
-            # by construction — both sides passed the same gates)
-            docs = docs.drop("text").join(textv, "url")
-            if para_info is not None:
-                docs = docs.join(para_info, "url", "left")
-            if substr_info is not None:
-                docs = docs.join(substr_info, "url", "left")
-            if pii_info is not None:
-                docs = docs.join(pii_info, "url", "left")
-        band_staging_path = None
-        if dedup is not None:
-            t_dd = time.monotonic()
-            # committed signature table (pre-banded rows of ALL
-            # previously-seen docs, keepers and dropped): snapshot
-            # BEFORE this run's append — makes dedup judge the delta
-            # against history, and dropped duplicates stay dropped when
-            # a resume re-offers them
-            sig_table_path = os.path.join(output_dir, "signatures")
-            # half-swapped compaction guard (ADVICE r7): a dedup_job
-            # compaction that crashed between its two renames leaves
-            # signatures/ absent and the full history parked at
-            # signatures_precompact/. Reading "no history" here would
-            # write a fresh delta-only signatures/ — after which the
-            # job-level recovery sees signatures/ present and never
-            # restores, silently stranding the cross-run history
-            # forever. Restore the parked copy before the read.
-            _recover_parked_signatures(spark, output_dir)
-            committed_bands = _read_table_if_exists(spark, sig_table_path)
-            band_staging_path = os.path.join(output_dir, "_staging",
-                                             run_id + "_sig")
-            keepers, overflow = _dedup_keepers(
-                textv, band_staging_path, committed_bands)
-            n_in = (docs_delta if docs_delta is not None
-                    else fields.count())
-            n_keep = keepers.count()
-            n_dropped_buckets = overflow.count()
-            docs = docs.join(keepers, "url", "left_semi")
-            claims = claims.join(keepers, "url", "left_semi")
-            docs_delta = n_keep
-            dd_ms = int((time.monotonic() - t_dd) * 1000)
-            spark.createDataFrame(
-                [(run_id, "dedup", -1, n_keep, 0, n_in - n_keep, dd_ms, 0),
-                 (run_id, "dedup_bands_dropped", -1, n_dropped_buckets,
-                  0, 0, 0, 0)],
-                "run_id string, stage string, partition_id int, "
-                "doc_count long, bytes long, fail_count long, "
-                "wall_ms long, attempt int"
-            ).coalesce(1).write.mode("append").parquet(metrics_path)
-        # idempotent claims append: a crash after the claims append but
-        # before the docs append leaves claims committed for urls the
-        # resume anti-join will re-process — skip those urls' claims
-        committed_claims_tbl = _read_table_if_exists(spark, claims_path)
-        if resume and committed_claims_tbl is not None:
-            claims = claims.join(
-                committed_claims_tbl.select("url").distinct(), "url",
-                "left_anti")
-        claims.write.mode("append").parquet(claims_path)
-        # layout guard: appending the OTHER layout to an existing docs
-        # table produces a mix Spark cannot read ('Conflicting directory
-        # structures'), which a swallowed read error would turn into a
-        # silently-disabled resume (code-review r3 finding). Partition
-        # discovery surfaces crawl_date as a schema column — an
-        # object-storage-safe probe, unlike a directory listing.
-        if committed_docs is not None:
-            existing_partitioned = "crawl_date" in committed_docs.columns
-            if existing_partitioned != partition_output_by_date:
-                raise ValueError(
-                    f"docs table at {docs_path} is "
-                    f"{'date-partitioned' if existing_partitioned else 'flat'}"
-                    f" but partition_output_by_date="
-                    f"{partition_output_by_date} — appending the other "
-                    f"layout would corrupt the table")
-            # same guard for the flag-dependent columns: appending the
-            # other schema produces a mixed-footer table whose reads
-            # silently drop or null the extra columns
-            for col, flag, opt in (("pii_counts", scrub, "scrub"),
-                                   ("paras_total", paragraph_dedup,
-                                    "paragraph_dedup"),
-                                   ("substr_words_removed",
-                                    substring_dedup, "substring_dedup")):
-                if (col in committed_docs.columns) != flag:
-                    raise ValueError(
-                        f"docs table at {docs_path} was written with "
-                        f"{opt}={col in committed_docs.columns} but this "
-                        f"run passed {opt}={flag} — keep the flag "
-                        f"consistent per output dir")
-        if partition_output_by_date:
-            (docs.withColumn("crawl_date",
-                             F.to_date("warc_ts").cast("string"))
-                 .write.mode("append").partitionBy("crawl_date")
-                 .parquet(docs_path))
-        else:
-            docs.write.mode("append").parquet(docs_path)
-        if dedup is not None:
-            # append the FULL delta band table (keepers AND dropped —
-            # both have committed content: a dropped dup's keeper is in
-            # the table; quality-dropped docs never reached staging)
-            # after the docs commit: future runs judge their deltas
-            # against every preserved doc, so a re-offered dropped
-            # duplicate drops again (cross-run idempotency). A crash
-            # before this append just means the next run judges against
-            # an older snapshot — it can keep a duplicate, never lose a
-            # document. partitionBy(band_no): at the 10^12-doc tier each
-            # band is an Iceberg identity partition, so the probe join
-            # shuffles one band's rows at a time and never lists the
-            # other 15. The repartition ON band_no compacts the append
-            # to exactly ONE file per band per run (VERDICT r5 item 4:
-            # without it every staging task wrote a sliver into every
-            # band dir — ≥16 x tasks small files per run, degrading the
-            # probe's listing after thousands of runs); long-lived
-            # tables additionally get tools/dedup_job.py
-            # --compact-signatures for a periodic full rewrite.
-            (spark.read.parquet(band_staging_path)
-             .repartition(LSH_BANDS, "band_no")
-             .write.mode("append").partitionBy("band_no")
-             .parquet(sig_table_path))
-        # delta = this run's staged rows (column-pruned count of the
-        # small staged delta), or the keeper count when dedup filtered
-        # the delta; cumulative = committed-before + delta — exact in
-        # every crash-resume scenario (a metrics-ledger sum would
-        # double-count deltas whose metrics committed but whose docs
-        # append crashed), and never a DATA rescan of the committed
-        # table (the count above is footer-metadata-only)
-        if docs_delta is None:
-            docs_delta = fields.count()
-        # ledger append LAST (after the docs commit marker): one tiny row
-        # recording the cumulative docs-table size — the next run's
-        # committed_before reads max() of this file instead of listing
-        # the (at 100 TB: millions-of-files) docs table
-        spark.createDataFrame(
-            [(run_id, committed_before + docs_delta)],
-            _LEDGER_SCHEMA).coalesce(1).write.mode("append").parquet(
-            os.path.join(output_dir, "ledger"))
-        # staging cleanup through the Hadoop FS API (works on object
-        # storage — VERDICT r4 item 6); the per-run band staging dir is
-        # re-derivable and already appended, so it goes too (ADVICE r4:
-        # retaining it doubled the signature footprint per run)
-        _hadoop_rm(spark, staging)
-        if band_staging_path is not None:
-            _hadoop_rm(spark, band_staging_path)
-        if para_staging_path is not None:
-            _hadoop_rm(spark, para_staging_path)
-        if ss_staging_path is not None:
-            _hadoop_rm(spark, ss_staging_path)
-        metrics = read_metrics(spark, metrics_path)
-        return PipelineResult(run_id, spark.read.parquet(docs_path),
-                              spark.read.parquet(claims_path), metrics,
-                              committed_before + docs_delta,
-                              time.monotonic() - t0,
-                              docs_delta=docs_delta)
-    # no-output path: finalize's docs plan branches twice off fields_df
-    # (docs scalars + per-doc claims agg) — persisting lets the UDF stage
-    # run once per action instead of twice. For LARGE corpora the pinned
-    # intermediate (text + pages + word boxes) can spill and cost more
-    # than the re-execution — pass cache_intermediate=False there, or use
-    # the output_dir mode whose parquet staging is the scalable
-    # materialization. Cached blocks have NO TTL: call result.unpersist()
-    # (or spark.catalog.clearCache()) when done.
-    cached = None
-    if cache_intermediate:
-        fields_df = cached = fields_df.persist()
-    claims, docs = finalize(fields_df)
-    # same stage order as the output path: quality gate → paragraph
-    # dedup → repetition gate → scrub → minhash dedup
-    if quality_min is not None:
-        docs = docs.where(F.col("completeness_score") >= quality_min)
-        claims = claims.join(docs.select("url"), "url", "left_semi")
-    textv = fields_df.select("url", "text")
-    if quality_min is not None:
-        textv = textv.join(docs.select("url"), "url", "left_semi")
-    # Un-pinned chain guard (ADVICE r7): with cache_intermediate=False
-    # and any text-quality stage enabled, the first chain stage's
-    # corpus-wide agg references this projection from ~3 subtrees —
-    # without a barrier the extraction UDF re-executes once per
-    # subtree. A slim (url, text) localCheckpoint is GC-managed (no
-    # cache slot to track) and costs one extraction pass.
-    if cached is None and (paragraph_dedup or substring_dedup
-                           or repetition_filter or scrub
-                           or decontaminate_ref is not None
-                           or dedup is not None):
-        textv = textv.localCheckpoint()
-    para_info = None
-    if paragraph_dedup:
-        pd_res = dedup_paragraphs(
-            textv.select(F.col("url").alias("doc_id"), "text")
-        ).localCheckpoint().select(
-            F.col("doc_id").alias("url"),
-            F.col("text_kept").alias("text"),
-            "paras_total", "paras_dropped")
-        textv = pd_res.select("url", "text")
-        para_info = pd_res.select("url", "paras_total", "paras_dropped")
-    substr_info = None
-    if substring_dedup:
-        ss_res = dedup_substrings(
-            textv.select(F.col("url").alias("doc_id"), "text"),
-            k=substring_k
-        ).localCheckpoint().select(
-            F.col("doc_id").alias("url"),
-            F.col("text_kept").alias("text"),
-            F.col("words_removed").alias("substr_words_removed"),
-            F.col("spans_removed").alias("substr_spans_removed"))
-        textv = ss_res.select("url", "text")
-        substr_info = ss_res.select("url", "substr_words_removed",
-                                    "substr_spans_removed")
-    if repetition_filter:
-        kept = gopher_repetition_keepers(
-            textv.select(F.col("url").alias("doc_id"), "text")
-        ).select(F.col("doc_id").alias("url")).localCheckpoint()
-        docs = docs.join(kept, "url", "left_semi")
-        claims = claims.join(kept, "url", "left_semi")
-        textv = textv.join(kept, "url", "left_semi")
-    if decontaminate_ref is not None:
-        kept = decontaminate_keepers(
-            textv.select(F.col("url").alias("doc_id"), "text"),
-            decontaminate_ref, n=decontaminate_ngram
-        ).select(F.col("doc_id").alias("url")).localCheckpoint()
-        docs = docs.join(kept, "url", "left_semi")
-        claims = claims.join(kept, "url", "left_semi")
-        textv = textv.join(kept, "url", "left_semi")
-    pii_info = None
-    if scrub:
-        sc = scrub_pii(textv)
-        textv = sc.select("url", F.col("text_scrubbed").alias("text"))
-        pii_info = sc.select("url", "pii_counts")
-    if paragraph_dedup or substring_dedup or scrub:
+    # the stage chain over the (url, text) projection of the pinned UDF
+    # output (column-pruned; finalize's claim-agg joins never enter it).
+    # Stage records: doc_count = rows out; fail_count = rows a gate
+    # dropped (rows in − rows out) or a rewrite touched — read off the
+    # barriers' observations, which their own actions filled
+    textv, audits, records = fields.select("url", "text"), [], []
+    docs_delta = fused_obs.get["docs"] if fused_obs is not None else 0
+    for stage in stages:
+        t_stage = time.monotonic()
+        textv, audit, got = stage.apply(run, textv, docs)
+        fail = docs_delta - got["rows"] if audit is None else got["touched"]
+        docs_delta = got["rows"]
+        records.append((run_id, stage.name, -1, docs_delta, 0, fail,
+                        int((time.monotonic() - t_stage) * 1000), 0))
+        audits += [] if audit is None else [audit]
+    if audits:
+        # one text-rewrite join into the docs view (it also drops what
+        # the gates dropped: textv holds exactly the surviving urls)
         docs = docs.drop("text").join(textv, "url")
-        if para_info is not None:
-            docs = docs.join(para_info, "url", "left")
-        if substr_info is not None:
-            docs = docs.join(substr_info, "url", "left")
-        if pii_info is not None:
-            docs = docs.join(pii_info, "url", "left")
-    if dedup is not None:
-        keepers, _ = _dedup_keepers(textv, None)
-        docs = docs.join(keepers, "url", "left_semi")
-        claims = claims.join(keepers, "url", "left_semi")
-    return PipelineResult(run_id, docs, claims, None, 0,
-                          time.monotonic() - t0, cached=cached)
+        for audit in audits:
+            docs = docs.join(audit, "url", "left")
+    elif stages:
+        docs = docs.join(textv.select("url"), "url", "left_semi")
+    if stages:
+        claims = claims.join(textv.select("url"), "url", "left_semi")
+
+    if not output_dir:
+        return PipelineResult(run_id, docs, claims, None, 0,
+                              time.monotonic() - t0,
+                              cached=fields if cache_intermediate else None)
+
+    if run.banded is not None:  # hot band buckets the candidate join capped
+        n_hot = lsh_band_overflow_from_banded(run.banded).count()
+        records.append((run_id, "dedup_bands_dropped", -1, n_hot, 0, 0, 0, 0))
+    metrics_path = os.path.join(output_dir, "metrics")
+    (udf_metrics.union(spark.createDataFrame(records, udf_metrics.schema))
+     .coalesce(1).write.mode("append").parquet(metrics_path))
+    # idempotent claims append: a crash between the claims and docs
+    # appends leaves claims of urls the resume re-processes — skip them
+    if resume and committed_claims is not None:
+        claims = claims.join(committed_claims.select("url").distinct(),
+                             "url", "left_anti")
+    claims.write.mode("append").parquet(claims_path)
+    if partition_output_by_date:
+        (docs.withColumn("crawl_date",
+                         F.to_date("warc_ts").cast("string"))
+             .write.mode("append").partitionBy("crawl_date")
+             .parquet(docs_path))
+    else:
+        docs.write.mode("append").parquet(docs_path)
+    if run.banded is not None:
+        # the FULL delta band table (keepers AND dropped: a dropped dup's
+        # keeper is committed; gate-dropped docs never reached banding),
+        # after the docs commit — a re-offered dropped duplicate drops
+        # again, and a crash before this append only makes the next run
+        # judge against an older snapshot (it can keep a duplicate,
+        # never lose a document). partitionBy(band_no): at the 10^12-doc
+        # tier the probe shuffles one band at a time; the repartition ON
+        # band_no writes ONE file per band per run (VERDICT r5 item 4),
+        # and --compact-signatures rewrites long-lived tables.
+        (run.banded.repartition(LSH_BANDS, "band_no")
+         .write.mode("append").partitionBy("band_no")
+         .parquet(os.path.join(output_dir, "signatures")))
+    # ledger append LAST (after the docs commit marker): the cumulative
+    # docs-table size, so the next run reads max() of this tiny table
+    # instead of listing the docs table. docs_delta (the last barrier's
+    # rows out) is exact in every crash-resume scenario, where a
+    # metrics sum would double-count deltas whose docs append crashed
+    (spark.createDataFrame([(run_id, committed_before + docs_delta)],
+                           _LEDGER_SCHEMA)
+     .coalesce(1).write.mode("append")
+     .parquet(os.path.join(output_dir, "ledger")))
+    # staging cleanup through the Hadoop FS API (object-storage safe —
+    # VERDICT r4 item 6), band staging too (ADVICE r4)
+    for path in run.staged:
+        _hadoop_rm(spark, path)
+    return PipelineResult(run_id, spark.read.parquet(docs_path),
+                          spark.read.parquet(claims_path),
+                          read_metrics(spark, metrics_path),
+                          committed_before + docs_delta,
+                          time.monotonic() - t0, docs_delta=docs_delta)

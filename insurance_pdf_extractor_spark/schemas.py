@@ -31,20 +31,6 @@ PAGE = T.StructType([
     T.StructField("word_boxes", T.ArrayType(WORD_BOX), True),
 ])
 
-# tokenize-stage output (html column deliberately dropped — manual column
-# pruning across the UDF boundary, SURVEY.md §7.3 item 3)
-TOKENIZED = T.StructType([
-    T.StructField("url", T.StringType(), False),
-    T.StructField("warc_ts", T.TimestampType(), True),
-    T.StructField("lang", T.StringType(), True),
-    T.StructField("doc_kind", T.StringType(), True),
-    T.StructField("text", T.StringType(), True),
-    T.StructField("pages", T.ArrayType(PAGE), True),
-    T.StructField("fallback_used", T.BooleanType(), True),
-    T.StructField("recovered_claims", T.ArrayType(T.StringType()), True),
-    T.StructField("error", T.StringType(), True),
-])
-
 # raw (string-valued) claim emitted by the fields stage; typing happens
 # natively in finalize
 CLAIM_RAW = T.StructType([

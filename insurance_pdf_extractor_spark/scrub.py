@@ -31,6 +31,8 @@ backreferences, no lookaround.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -507,8 +509,10 @@ def gopher_repetition_keepers(df: DataFrame, id_col: str = "doc_id",
     # SUBSTITUTING aliases, which re-inlines the whole per-row
     # expression chain into the predicate (measured: unbounded slowdown
     # via per-element re-evaluation inside HOF lambdas). A
-    # CollectMetrics node is a plan barrier filters cannot cross.
-    joined = joined.observe("gopher_repetition_gate",
+    # CollectMetrics node is a plan barrier filters cannot cross. The
+    # name is unique per call: one action over two keepers outputs
+    # (a union, a join) must not see two metrics with one name.
+    joined = joined.observe(f"gopher_repetition_gate_{uuid.uuid4().hex}",
                             F.count(F.lit(1)).alias("docs_screened"))
     cond = None
     for col, bound in thresholds.items():

@@ -243,19 +243,51 @@ class TestLineageAndResume:
         assert claims.count() == nested_total
 
 
+class TestFusedLineage:
+    def test_fields_wall_ms_excludes_input_waits(self):
+        """The fields row's wall_ms times the field extraction calls only:
+        a slow upstream (the iterator waiting on its next Arrow batch)
+        is charged to neither stage."""
+        import datetime
+        import json
+        import time
+
+        import pandas as pd
+
+        from insurance_pdf_extractor_spark.operators.fused import (
+            make_fused_fn)
+        ts = datetime.datetime(2024, 1, 1)
+
+        def slow_batches():
+            for b in range(3):
+                time.sleep(0.4)
+                yield pd.DataFrame({
+                    "url": [f"https://w.test/{b}/{i}" for i in range(4)],
+                    "warc_ts": [ts] * 4, "html": [None] * 4,
+                    "text": ["Policy Number: WC-1234 short note"] * 4,
+                    "lang": ["en"] * 4, "doc_kind0": ["text"] * 4,
+                    "oversize": [False] * 4})
+
+        out = list(make_fused_fn("w", emit_metrics=True)(slow_batches()))
+        rows = [json.loads(m) for m in out[-1]["_metric"]]
+        by_stage = {r["stage"]: r for r in rows}
+        assert by_stage["fields"]["doc_count"] == 12
+        assert by_stage["fields"]["wall_ms"] < 400
+        assert by_stage["tokenize"]["wall_ms"] < 400
+
+
 class TestPlanShape:
     def test_single_wide_dependency_before_udfs(self, spark, web_pages):
         """The happy-path plan has exactly one explicit shuffle before the
-        UDF stages (SURVEY.md §3.1) and the html column is pruned after
-        tokenize."""
-        from insurance_pdf_extractor_spark.operators.fields_stage import (
-            extract_fields)
+        UDF stage (SURVEY.md §3.1) and the html column is pruned by the
+        fused tokenize+fields stage."""
+        from insurance_pdf_extractor_spark.operators.fused import (
+            tokenize_and_extract)
         from insurance_pdf_extractor_spark.operators.sniff import sniff
-        from insurance_pdf_extractor_spark.operators.tokenize import tokenize
         from pyspark.sql import functions as F
         df = (web_pages.withColumn("_h", F.xxhash64("url"))
               .repartitionByRange(8, "_h").drop("_h"))
-        out = extract_fields(tokenize(sniff(df), "t", None), "t", None)
+        out = tokenize_and_extract(sniff(df), "t")
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert plan.count("Exchange") == 1
         assert "html" not in out.columns
@@ -1039,3 +1071,102 @@ class TestTextQualityChain:
             assert col not in res.docs.columns
         stages = {r["stage"] for r in res.metrics.collect()}
         assert not stages & {"scrub", "paradedup", "repetition"}
+
+
+class TestStageList:
+    """Both run modes take one stage list; its lineage rows come from the
+    observations on barriers that run anyway, and a run appends them
+    with the UDF's rows as one metrics file."""
+
+    @staticmethod
+    def _own_words(tag, i):
+        """Fourteen words no other page shares."""
+        return " ".join(f"w{j}{tag}p{i}" for j in range(14))
+
+    @staticmethod
+    def _chain_pages(spark, tag, n):
+        from insurance_pdf_extractor_spark.schemas import WEB_PAGES
+        import datetime
+        ts = datetime.datetime(2024, 1, 1)
+        banner = "SUBSCRIBE NOW | Cookie policy | All rights reserved"
+        block = ("standard policy exclusion wording repeated verbatim "
+                 "across every carrier template in the portfolio today")
+        rows = [(f"https://sl.test/{tag}/{i}",
+                 f"{banner}\n{TestStageList._own_words(tag, i)}. "
+                 f"{block}\nmail{i}@example.com")
+                for i in range(n)]
+        return spark.createDataFrame(
+            [(u, ts, None, t, "en") for u, t in rows], schema=WEB_PAGES)
+
+    def test_full_chain_actions_and_one_metrics_file(self, spark, tmp_path,
+                                                     monkeypatch):
+        import linecache
+        import sys
+
+        from insurance_pdf_extractor_spark import pipeline as P
+        ref = spark.createDataFrame([(self._own_words("r2", 3),)],
+                                    "text string")
+        flags = dict(quality_min=0.0, paragraph_dedup=True,
+                     substring_dedup=True, repetition_filter=True,
+                     decontaminate_ref=ref, scrub=True,
+                     dedup="minhash-lsh")
+        out = str(tmp_path / "out")
+        P.run_pipeline(spark, self._chain_pages(spark, "r1", 4),
+                       output_dir=out, run_id="sl1", **flags)
+        metrics_dir = os.path.join(out, "metrics")
+
+        def metric_files():
+            return {f for f in os.listdir(metrics_dir)
+                    if f.endswith(".parquet")}
+
+        before = metric_files()
+        calls = []
+        here = os.path.realpath(P.__file__)
+        frame_cls = type(spark.range(1))   # the session's DataFrame class
+        for name in ("count", "first", "collect"):
+            def wrapped(self, *a, _orig=getattr(frame_cls, name),
+                        _name=name, **k):
+                frame = sys._getframe(1)
+                if os.path.realpath(frame.f_code.co_filename) == here:
+                    calls.append((_name, frame.f_code.co_name,
+                                  linecache.getline(frame.f_code.co_filename,
+                                                    frame.f_lineno)))
+                return _orig(self, *a, **k)
+            monkeypatch.setattr(frame_cls, name, wrapped)
+        res = P.run_pipeline(
+            spark, self._chain_pages(spark, "r1", 4).unionByName(
+                self._chain_pages(spark, "r2", 5)),
+            output_dir=out, run_id="sl2", **flags)
+        monkeypatch.undo()
+
+        # only the ledger max and the band-overflow aggregate are left
+        assert sorted((n, fn) for n, fn, _ in calls) == [
+            ("count", "run_pipeline"), ("first", "_ledger_committed")], calls
+        lines = {n: line for n, _, line in calls}
+        assert "overflow" in lines["count"]
+        assert "docs_total_after" in lines["first"]
+        assert len(metric_files() - before) == 1
+        assert not os.listdir(os.path.join(out, "_staging"))
+
+        # one record per stage, chained: a gate's kept + dropped is the
+        # previous stage's rows out, a rewrite keeps every row; the last
+        # rows out is the run's delta
+        rows = res.metrics.where(F.col("run_id") == "sl2").collect()
+        m = {r["stage"]: r for r in rows if r["partition_id"] < 0}
+        chain = ("quality", "paradedup", "substrdedup", "repetition",
+                 "decontam", "scrub", "dedup")
+        assert set(m) == set(chain) | {"dedup_bands_dropped"}
+        n = sum(r["doc_count"] for r in rows if r["stage"] == "fields")
+        assert n == 5
+        for stage in chain:
+            if stage in ("paradedup", "substrdedup", "scrub"):
+                assert m[stage]["doc_count"] == n, stage
+            else:
+                assert m[stage]["doc_count"] + m[stage]["fail_count"] == n
+            n = m[stage]["doc_count"]
+        assert m["decontam"]["fail_count"] == 1       # the leaked page
+        assert m["scrub"]["fail_count"] == n          # every mail redacted
+        assert res.docs_delta == n == 4
+        assert res.docs.where(F.col("url").startswith(
+            "https://sl.test/r2/")).count() == n
+

@@ -28,6 +28,14 @@ _PAGE_RE = re.compile(r"\n={80}\nPAGE (\d+)\n={80}\n\n")
 _TABLE_RE = re.compile(r"\[TABLE (\d+)\]\n")
 
 
+def _require_reference() -> None:
+    """The corpus-wide checks need the reference's shipped artifacts;
+    where they are not present there is nothing to check against."""
+    if not REF_ARTIFACTS:
+        pytest.skip("reference extraction artifacts not present "
+                    "(the REF_ARTIFACTS glob matched no file)")
+
+
 def check_grammar(text: str) -> dict:
     """Assert the extraction-framing grammar; return counted elements."""
     lines = text.split("\n")
@@ -99,6 +107,7 @@ def test_reference_artifact_grammar(path):
 
 
 def test_reference_corpus_has_tables():
+    _require_reference()
     total = 0
     for path in REF_ARTIFACTS:
         text = open(path, encoding="utf-8", errors="replace").read()
@@ -109,6 +118,7 @@ def test_reference_corpus_has_tables():
 def test_format_table_roundtrips_reference_tables():
     """The reference's OWN formatted tables, de-formatted back to cells and
     re-formatted with THIS repo's format_table, must be byte-identical."""
+    _require_reference()
     checked = 0
     for path in REF_ARTIFACTS:
         text = open(path, encoding="utf-8", errors="replace").read()

@@ -239,6 +239,21 @@ class TestGopherRepetitionStats:
                 for r in gopher_repetition_keepers(df).collect()}
         assert kept == {2, 3}
 
+    def test_two_keepers_outputs_in_one_action(self, spark):
+        """Each call observes under its own name: a union of two keepers
+        outputs runs as one action instead of failing on a duplicated
+        metric name."""
+        spam = " ".join(["buy cheap pills online now"] * 25)
+        a = spark.createDataFrame(
+            [(1, spam), (2, "A clean claim narrative about a burst pipe.")],
+            "doc_id int, text string")
+        b = spark.createDataFrame(
+            [(3, "Another clean and entirely ordinary claim report.")],
+            "doc_id int, text string")
+        both = gopher_repetition_keepers(a).union(
+            gopher_repetition_keepers(b))
+        assert {r["doc_id"] for r in both.collect()} == {2, 3}
+
     def test_thresholds_cover_the_family(self):
         keys = set(GOPHER_REPETITION_THRESHOLDS)
         assert {"dup_line_frac", "dup_line_char_frac"} <= keys

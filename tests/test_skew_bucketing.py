@@ -63,3 +63,25 @@ def test_salted_join_rejects_small_side_preserving(spark):
     small = spark.createDataFrame([(1, "a")], ["k", "name"])
     with pytest.raises(ValueError, match="does not support"):
         salted_join(big, small, "k", how="full")
+
+
+class TestSpreadInput:
+    def test_broadcast_join_keeps_scan_shape(self, spark, tmp_path):
+        """A broadcast join ships only the small side: the one-file
+        scan still sets the parallelism, so spread_input spreads it."""
+        from insurance_pdf_extractor_spark.parallel import spread_input
+        path = str(tmp_path / "one_file")
+        (spark.range(0, 200).select(F.col("id"), (F.col("id") % 5)
+                                    .alias("k"))
+         .coalesce(1).write.parquet(path))
+        small = spark.createDataFrame(
+            [(i, f"dim{i}") for i in range(5)], ["k", "name"])
+        joined = spark.read.parquet(path).join(F.broadcast(small), "k")
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastExchange" in plan
+        assert joined.rdd.getNumPartitions() == 1
+        want = max(spark.sparkContext.defaultParallelism,
+                   int(spark.conf.get("spark.sql.shuffle.partitions")))
+        spread = spread_input(joined, "id")
+        assert spread.rdd.getNumPartitions() == want > 1
+        assert spread.count() == 200
