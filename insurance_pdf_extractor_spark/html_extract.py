@@ -142,7 +142,6 @@ def extract_html_document(data: bytes) -> dict:
         "extraction_method": "html",
         "is_scanned": False,
         "confidence": 1.0,
-        "word_boxes": [],
     }
     return {"doc_kind": "html", "text": all_text, "pages": [page],
             "fallback_used": False, "recovered_claims": [], "error": None}

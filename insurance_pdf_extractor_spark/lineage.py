@@ -34,8 +34,8 @@ _METRIC_JSON = T.StructType(METRICS.fields + [
 
 def metric_json(run_id: str, stage: str, doc_count: int, n_bytes: int,
                 fail_count: int, wall_ms: int) -> str:
-    """Build one metric row's JSON payload. Called from INSIDE a
-    mapInPandas iterator, once per (stage, partition)."""
+    """Build one metric row's JSON payload. Called from INSIDE the fused
+    ``mapInArrow`` iterator, once per (stage, partition)."""
     tc = TaskContext.get()
     return json.dumps({
         "run_id": run_id, "stage": stage,

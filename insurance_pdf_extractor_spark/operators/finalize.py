@@ -207,15 +207,8 @@ def finalize(fields_df: DataFrame) -> tuple[DataFrame, DataFrame]:
         (completeness >= 0.7).alias("is_complete"),
         "policy_number", "insured_name", "report_date", "num_chunks",
         "field_spans", "fallback_used", "recovered_claims", "error",
-        F.size("pages").alias("total_pages"),                           # pages
-        F.aggregate("pages", F.lit(0),
-                    lambda acc, p: acc + p["is_scanned"].cast("int"))
-         .alias("scanned_pages"),                                       # A4
-        F.when(F.size("pages") > 0,
-               F.aggregate("pages", F.lit(0.0),
-                           lambda acc, p: acc + p["confidence"])
-               / F.size("pages")).otherwise(F.lit(0.0))
-         .alias("avg_confidence"),                                      # A3
+        # page scalars, reduced from the page list in the UDF
+        "total_pages", "scanned_pages", "avg_confidence",               # A3/A4
         F.array_distinct(
             F.regexp_extract_all(F.col("text"),
                                  F.lit(r"(?i)Claim#?\s*(\d+)"), F.lit(1)))

@@ -8,7 +8,7 @@ uncompressed content streams, ``Tm/Td/TD/TL/T*`` text positioning,
 mildly foreign PDFs degrade to partial text instead of failing.
 
 Everything here is per-document pure Python executed INSIDE vectorized
-``mapInPandas`` batches — never row-at-a-time Spark UDFs.
+``mapInArrow`` batches — never row-at-a-time Spark UDFs.
 """
 
 from __future__ import annotations

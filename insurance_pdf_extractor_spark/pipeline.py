@@ -4,7 +4,7 @@
       → anti-join vs committed output          # resumable re-runs
       → repartition(N, xxhash64(url))          # skew kill / size balance
       → sniff     (native exprs)               # stage 1
-      → tokenize+fields (ONE mapInPandas)      # stages 2-4, fused
+      → tokenize+fields (ONE mapInArrow)       # stages 2-4, fused
       → finalize  (native explode/window/agg)  # stage 5
       → the opt-in stage list, in this order, each ending in a barrier:
         quality → paradedup → substrdedup → repetition → decontam
@@ -51,6 +51,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .dedup import (LSH_BANDS, _lsh_banded, dedup_documents,
                     dedup_paragraphs, dedup_substrings,
@@ -202,7 +203,19 @@ def _recover_parked_signatures(spark: SparkSession,
             f"empty-looking cross-run dedup store")
 
 
-_LEDGER_SCHEMA = "run_id string, docs_total_after long"
+_LEDGER = T.StructType([T.StructField("run_id", T.StringType()),
+                        T.StructField("docs_total_after", T.LongType())])
+
+
+def _jvm_rows(spark: SparkSession, rows: list[tuple],
+              schema: T.StructType) -> DataFrame:
+    """``rows`` as a DataFrame of ``schema``, built from literals in the
+    JVM alone: ``createDataFrame(list)`` would ship them through a Python
+    RDD, which forks a second Python worker pool next to the UDF's. The
+    cast gives the columns ``schema``'s types and nullability."""
+    return spark.range(1).select(F.inline(
+        F.array(*[F.struct(*map(F.lit, row)) for row in rows])
+        .cast(T.ArrayType(schema))))
 
 
 def _ledger_committed(spark: SparkSession, ledger_path: str,
@@ -500,8 +513,8 @@ def run_pipeline(spark: SparkSession, web_pages: DataFrame,
     # without cache_intermediate, so the extraction runs once
     run = _Run(spark, run_id, output_dir,
                pin_fields=cache_intermediate or bool(stages))
-    # tokenize + fields run FUSED (one Arrow crossing for the fat text /
-    # pages columns), emitting per-stage lineage as sentinel rows
+    # tokenize + fields run FUSED (one Arrow crossing for the fat text
+    # column), emitting per-stage lineage as sentinel rows
     # (lineage.py). The pinned output serves both finalize branches and
     # isolates this run from its own appends (module doc).
     pinned, fused_obs = _barrier(
@@ -545,7 +558,7 @@ def run_pipeline(spark: SparkSession, web_pages: DataFrame,
         n_hot = lsh_band_overflow_from_banded(run.banded).count()
         records.append((run_id, "dedup_bands_dropped", -1, n_hot, 0, 0, 0, 0))
     metrics_path = os.path.join(output_dir, "metrics")
-    (udf_metrics.union(spark.createDataFrame(records, udf_metrics.schema))
+    (udf_metrics.union(_jvm_rows(spark, records, udf_metrics.schema))
      .coalesce(1).write.mode("append").parquet(metrics_path))
     # idempotent claims append: a crash between the claims and docs
     # appends leaves claims of urls the resume re-processes — skip them
@@ -578,8 +591,7 @@ def run_pipeline(spark: SparkSession, web_pages: DataFrame,
     # instead of listing the docs table. docs_delta (the last barrier's
     # rows out) is exact in every crash-resume scenario, where a
     # metrics sum would double-count deltas whose docs append crashed
-    (spark.createDataFrame([(run_id, committed_before + docs_delta)],
-                           _LEDGER_SCHEMA)
+    (_jvm_rows(spark, [(run_id, committed_before + docs_delta)], _LEDGER)
      .coalesce(1).write.mode("append")
      .parquet(os.path.join(output_dir, "ledger")))
     # staging cleanup through the Hadoop FS API (object-storage safe —

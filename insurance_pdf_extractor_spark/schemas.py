@@ -1,5 +1,6 @@
 """Declared StructTypes for every pipeline stage (SURVEY.md §1.2:
-fixed schemas declared once; mapInPandas output schemas are mandatory)."""
+fixed schemas declared once; the fused ``mapInArrow`` stage builds its
+output against the Arrow form of ``FIELDS_OUT``)."""
 
 from __future__ import annotations
 
@@ -12,23 +13,6 @@ WEB_PAGES = T.StructType([
     T.StructField("html", T.BinaryType(), True),
     T.StructField("text", T.StringType(), True),
     T.StructField("lang", T.StringType(), True),
-])
-
-WORD_BOX = T.StructType([
-    T.StructField("x0", T.DoubleType(), True),
-    T.StructField("y0", T.DoubleType(), True),
-    T.StructField("x1", T.DoubleType(), True),
-    T.StructField("y1", T.DoubleType(), True),
-    T.StructField("text", T.StringType(), True),
-])
-
-PAGE = T.StructType([
-    T.StructField("page_number", T.IntegerType(), True),
-    T.StructField("text", T.StringType(), True),
-    T.StructField("extraction_method", T.StringType(), True),
-    T.StructField("is_scanned", T.BooleanType(), True),
-    T.StructField("confidence", T.DoubleType(), True),
-    T.StructField("word_boxes", T.ArrayType(WORD_BOX), True),
 ])
 
 # raw (string-valued) claim emitted by the fields stage; typing happens
@@ -57,7 +41,11 @@ FIELDS_OUT = T.StructType([
     T.StructField("lang", T.StringType(), True),
     T.StructField("doc_kind", T.StringType(), True),
     T.StructField("text", T.StringType(), True),
-    T.StructField("pages", T.ArrayType(PAGE), True),
+    # the page list reduced in the UDF: count, scanned count, mean
+    # confidence (0.0 for no pages)
+    T.StructField("total_pages", T.IntegerType(), True),
+    T.StructField("scanned_pages", T.IntegerType(), True),
+    T.StructField("avg_confidence", T.DoubleType(), True),
     T.StructField("fallback_used", T.BooleanType(), True),
     T.StructField("recovered_claims", T.ArrayType(T.StringType()), True),
     T.StructField("error", T.StringType(), True),

@@ -414,6 +414,10 @@ def gopher_repetition_stats(df: DataFrame, id_col: str = "doc_id",
     All fractions are rounded to 4 places; documents with no lines /
     fewer than n words score 0.0. Null text behaves as empty.
 
+    Precondition: ``id_col`` is unique. The output has one row per
+    INPUT ROW, not per id, so a duplicated id yields one stats row per
+    copy and a join of the stats on the id fans out.
+
     Shape at scale (r8 — everything UDF-free, asserted in tests): every
     signal here is per-DOCUMENT by definition, so the whole screen is a
     pure per-row projection — zero shuffles, zero explodes, perfect
@@ -460,6 +464,12 @@ def gopher_repetition_keepers(df: DataFrame, id_col: str = "doc_id",
     from :func:`repeated_ngram_stats` at n = 2, 3, 4. A doc is kept iff
     every signal is ≤ its bound. Returns a one-column DataFrame
     (``id_col``) for a left-semi join against the corpus.
+
+    Precondition: ``id_col`` is unique. The output has one row per
+    INPUT ROW that passes, so a duplicated id comes out once per copy
+    and an equi-join of the corpus against the keepers fans out (a
+    left-semi join does not). The top-n-gram screens aggregate by id,
+    so copies sharing an id also pool their n-gram counts.
 
     A top-n-gram gate only applies when the top n-gram occurs ≥ 2
     times: a single occurrence is not repetition, yet its count×len

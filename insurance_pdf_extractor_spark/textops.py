@@ -251,7 +251,6 @@ def extract_layout(doc: P.PDFDocument) -> tuple[str, list[dict]]:
             "extraction_method": "layout",
             "is_scanned": False,
             "confidence": 0.0 if blank else 1.0,
-            "word_boxes": L.word_boxes(page),
         })
         body_regions.append("\n".join(body_parts))
 
@@ -284,7 +283,6 @@ def extract_raw(doc: P.PDFDocument) -> tuple[str, list[dict]]:
             "extraction_method": "raw",
             "is_scanned": False,
             "confidence": 0.9,
-            "word_boxes": [],
         })
     return all_text, pages_meta
 
@@ -380,7 +378,6 @@ def extract_ocr(doc: P.PDFDocument) -> tuple[str, list[dict]]:
             "extraction_method": "ocr",
             "is_scanned": True,
             "confidence": 0.85,
-            "word_boxes": [],
         })
     return "".join(parts), pages_meta
 

@@ -374,7 +374,7 @@ class TestDedupParagraphs:
         _, out = self._run(spark)
         plan = out._jdf.queryExecution().executedPlan().toString()
         for marker in ("BatchEvalPython", "ArrowEvalPython",
-                       "MapInPandas"):
+                       "MapInPandas", "MapInArrow"):
             assert marker not in plan
         # hot-list aggregation must have a map-side partial combine so
         # 10^9-row banner keys collapse before the shuffle

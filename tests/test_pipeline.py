@@ -243,37 +243,105 @@ class TestLineageAndResume:
         assert claims.count() == nested_total
 
 
+def _fused_batch(rows, ts_type=None):
+    """A sniffed-input RecordBatch for ``make_fused_fn``: ``rows`` are
+    (url, html, text, doc_kind0, oversize) tuples."""
+    import datetime
+
+    import pyarrow as pa
+    ts = datetime.datetime(2024, 1, 1, 12, 30)
+    url, html, text, kind0, oversize = (list(c) for c in zip(*rows))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(url, pa.string()),
+         pa.array([ts] * len(rows), ts_type or pa.timestamp("us", "UTC")),
+         pa.array(html, pa.binary()), pa.array(text, pa.string()),
+         pa.array([None if i % 2 else "en" for i in range(len(rows))],
+                  pa.string()),
+         pa.array(kind0, pa.string()), pa.array(oversize, pa.bool_())],
+        names=["url", "warc_ts", "html", "text", "lang", "doc_kind0",
+               "oversize"])
+
+
 class TestFusedLineage:
     def test_fields_wall_ms_excludes_input_waits(self):
         """The fields row's wall_ms times the field extraction calls only:
         a slow upstream (the iterator waiting on its next Arrow batch)
         is charged to neither stage."""
-        import datetime
         import json
         import time
 
-        import pandas as pd
-
         from insurance_pdf_extractor_spark.operators.fused import (
             make_fused_fn)
-        ts = datetime.datetime(2024, 1, 1)
 
         def slow_batches():
             for b in range(3):
                 time.sleep(0.4)
-                yield pd.DataFrame({
-                    "url": [f"https://w.test/{b}/{i}" for i in range(4)],
-                    "warc_ts": [ts] * 4, "html": [None] * 4,
-                    "text": ["Policy Number: WC-1234 short note"] * 4,
-                    "lang": ["en"] * 4, "doc_kind0": ["text"] * 4,
-                    "oversize": [False] * 4})
+                yield _fused_batch(
+                    [(f"https://w.test/{b}/{i}", None,
+                      "Policy Number: WC-1234 short note", "text", False)
+                     for i in range(4)])
 
         out = list(make_fused_fn("w", emit_metrics=True)(slow_batches()))
-        rows = [json.loads(m) for m in out[-1]["_metric"]]
+        rows = [json.loads(m) for m in out[-1].column("_metric").to_pylist()]
         by_stage = {r["stage"]: r for r in rows}
         assert by_stage["fields"]["doc_count"] == 12
         assert by_stage["fields"]["wall_ms"] < 400
         assert by_stage["tokenize"]["wall_ms"] < 400
+
+    @pytest.mark.parametrize("tz", [None, "UTC"],
+                             ids=["timestamp_ntz", "timestamp"])
+    def test_page_scalars_and_passthrough(self, tz):
+        """One doc of every kind: the UDF's three page scalars equal the
+        aggregation of the tokenize result's page list, and url /
+        warc_ts / lang leave the UDF as the input arrays."""
+        import functools
+        import random
+
+        import pyarrow as pa
+
+        from insurance_pdf_extractor_spark import fixtures as FX
+        from insurance_pdf_extractor_spark.operators.fused import (
+            make_fused_fn)
+        from insurance_pdf_extractor_spark.operators.tokenize import (
+            _extract_one)
+        rng = random.Random(5)
+        pdf = FX.make_loss_run_pdf(rng)
+        rows = [("https://k.test/digital", pdf, None, "pdf", False),
+                ("https://k.test/scanned", FX.make_scanned_pdf(rng), None,
+                 "pdf", False),
+                ("https://k.test/rotated", FX.make_rotated_pdf(rng), None,
+                 "pdf", False),
+                ("https://k.test/html", FX.make_html_page(rng), None,
+                 "html", False),
+                ("https://k.test/text", None, FX.make_text_only(rng),
+                 "text", False),
+                ("https://k.test/empty", None, None, "empty", False),
+                ("https://k.test/other", b"GIF89a\x01\x00", None, "other",
+                 False),
+                ("https://k.test/oversize", pdf, None, "pdf", True),
+                # routed as pdf, rejected by the parser (no header)
+                ("https://k.test/broken", pdf[9:], None, "pdf", False)]
+        batch = _fused_batch(rows, pa.timestamp("us", tz))
+        out, = make_fused_fn("k")(iter([batch]))
+        for c in ("url", "warc_ts", "lang"):
+            assert out.column(c).equals(batch.column(c)), c
+        got = out.to_pydict()
+        kinds = dict(zip(got["url"], got["doc_kind"]))
+        assert kinds["https://k.test/scanned"] == "pdf_scanned"
+        assert kinds["https://k.test/oversize"] == "oversize"
+        assert kinds["https://k.test/broken"] == "pdf_error"
+        for i, (url, html, text, kind0, oversize) in enumerate(rows):
+            pages = [] if oversize else _extract_one(kind0, html, text)[
+                "pages"]
+            want = (len(pages),
+                    sum(int(p["is_scanned"]) for p in pages),
+                    functools.reduce(lambda acc, p: acc + p["confidence"],
+                                     pages, 0.0) / len(pages)
+                    if pages else 0.0)
+            assert (got["total_pages"][i], got["scanned_pages"][i],
+                    got["avg_confidence"][i]) == want, url
+        assert got["scanned_pages"][1] == got["total_pages"][1] > 0
+        assert got["total_pages"][0] > 1
 
 
 class TestPlanShape:
@@ -1170,3 +1238,49 @@ class TestStageList:
         assert res.docs.where(F.col("url").startswith(
             "https://sl.test/r2/")).count() == n
 
+    def test_run_starts_no_python_rdd(self, spark, tmp_path, monkeypatch):
+        """A full-chain output-dir run builds its metrics and ledger rows
+        in the JVM: nothing calls SparkContext.parallelize (the Python RDD
+        behind createDataFrame(list), which forks a second Python worker
+        pool next to the UDF's), and both tables keep their footers."""
+        import glob
+
+        import pyarrow.parquet as pq
+        from pyspark import SparkContext
+
+        from insurance_pdf_extractor_spark.pipeline import run_pipeline
+        src = str(tmp_path / "web")
+        self._chain_pages(spark, "p1", 4).write.parquet(src)
+        web = spark.read.parquet(src)
+        ref = spark.range(1).select(
+            F.lit(self._own_words("p1", 2)).alias("text"))
+
+        def no_python_rdd(*a, **k):
+            raise AssertionError("run_pipeline built a Python RDD")
+        monkeypatch.setattr(SparkContext, "parallelize", no_python_rdd)
+        out = str(tmp_path / "out")
+        res = run_pipeline(spark, web, output_dir=out, run_id="np1",
+                           quality_min=0.0, paragraph_dedup=True,
+                           substring_dedup=True, repetition_filter=True,
+                           decontaminate_ref=ref, scrub=True,
+                           dedup="minhash-lsh")
+        monkeypatch.undo()
+        assert res.docs_delta == 3        # the leaked page is dropped
+
+        def footer(table):
+            files = glob.glob(os.path.join(out, table, "*.parquet"))
+            assert len(files) == 1
+            return [(f.name, str(f.type), f.nullable)
+                    for f in pq.read_schema(files[0])]
+
+        assert footer("metrics") == [
+            ("run_id", "string", True), ("stage", "string", True),
+            ("partition_id", "int32", True), ("doc_count", "int64", True),
+            ("bytes", "int64", True), ("fail_count", "int64", True),
+            ("wall_ms", "int64", True), ("attempt", "int32", True)]
+        assert footer("ledger") == [("run_id", "string", True),
+                                    ("docs_total_after", "int64", True)]
+        ledger = spark.read.parquet(os.path.join(out, "ledger")).collect()
+        assert [tuple(r) for r in ledger] == [("np1", 3)]
+        stages = {r["stage"] for r in res.metrics.collect()}
+        assert {"tokenize", "fields", "dedup", "dedup_bands_dropped"} <= stages

@@ -108,7 +108,7 @@ class TestPipelineShape:
         out = tokenize_and_extract(sniff(df), "t", None)
         plan = _plan(out)
         assert plan.count("Exchange") == 1
-        assert plan.count("MapInPandas") == 1  # stages fused
+        assert plan.count("MapInArrow") == 1  # stages fused
         assert "html" not in out.columns      # fat column pruned at UDF
 
     def test_auto_uses_scan_splits_no_fat_shuffle(self, spark, tmp_path):
@@ -117,7 +117,7 @@ class TestPipelineShape:
         size-balanced splits, repartition='auto' must NOT shuffle the
         fat binary column — the only Exchange in the claims plan is the
         tiny post-UDF window exchange, and nothing below the
-        MapInPandas. The scaling bench can opt into this shape with
+        MapInArrow. The scaling bench can opt into this shape with
         SCALING_REPARTITION=auto (its default and the recorded
         BENCH/scaling.json artifact use the explicit "always"
         shuffle)."""
@@ -136,10 +136,10 @@ class TestPipelineShape:
                                repartition="auto", num_partitions=8,
                                cache_intermediate=False)
             plan = _plan(res.claims)
-            assert plan.count("MapInPandas") == 1
+            assert plan.count("MapInArrow") == 1
             # physical plans print top-down: everything after the
-            # MapInPandas line is its input side — no Exchange there
-            scan_side = plan.split("MapInPandas", 1)[1]
+            # MapInArrow line is its input side — no Exchange there
+            scan_side = plan.split("MapInArrow", 1)[1]
             assert "Exchange" not in scan_side
         finally:
             spark.conf.set(key, old)
@@ -149,6 +149,7 @@ class TestPipelineShape:
         plan = _plan(sniff(web_pages))
         assert "EvalPython" not in plan
         assert "MapInPandas" not in plan
+        assert "MapInArrow" not in plan
 
 
 class TestLazyBuilders:

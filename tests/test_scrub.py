@@ -14,7 +14,7 @@ from insurance_pdf_extractor_spark.scrub import (
     repeated_ngram_stats, scrub_pii)
 
 _PY_MARKERS = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-               "FlatMapGroupsInPandas")
+               "MapInArrow", "FlatMapGroupsInPandas")
 
 
 def _plan(df) -> str:

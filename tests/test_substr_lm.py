@@ -17,7 +17,7 @@ from insurance_pdf_extractor_spark.lm import (ppl_buckets, unigram_fit,
                                               unigram_doc_scores)
 
 _PY_MARKERS = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-               "FlatMapGroupsInPandas")
+               "MapInArrow", "FlatMapGroupsInPandas")
 
 _BOILER = ("please accept our terms of service before continuing "
            "to the site")  # 10 words

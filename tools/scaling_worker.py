@@ -88,14 +88,15 @@ def main() -> None:
 
     # Warmup must reach EVERY core's Python worker: a limit() warmup only
     # starts a few workers and the first real run then pays a 32-wide
-    # import storm inside the measured window. Full-width dummy pass:
+    # import storm inside the measured window. Full-width dummy pass,
+    # on mapInArrow like the fused stage, so it warms that worker kind
+    # and leaves no pandas import behind in the reused workers:
     def _import_engine(batches):
-        import insurance_pdf_extractor_spark.textops    # noqa: F401
-        import insurance_pdf_extractor_spark.fields     # noqa: F401
+        import insurance_pdf_extractor_spark.operators.fused  # noqa: F401
         yield from batches
 
     (spark.range(0, cores * 64, numPartitions=cores * 4)
-          .mapInPandas(_import_engine, schema="id long").count())
+          .mapInArrow(_import_engine, schema="id long").count())
     # FULL-SIZE uncounted warmup run: executor JVMs JIT the parquet/
     # shuffle/Arrow hot paths only under real load — a limit() warmup
     # left the first executor-mode timed run 2-4x cold (measured
