@@ -1294,8 +1294,8 @@ def q_pq_ivfpq_topk(spark, sf):
 
 
 #: candidate-pair fixture for the graded keeper election: a diameter-6
-#: chain (pointer jumping must contract it), a triangle, a plain pair,
-#: and a star with edges written in both orientations.
+#: chain (needs several star rounds to converge), a triangle, a plain
+#: pair, and a star with edges written in both orientations.
 _DEDUP_PAIRS = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7),
                 (10, 11), (11, 12), (10, 12),
                 (20, 21),
@@ -1303,26 +1303,17 @@ _DEDUP_PAIRS = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7),
 
 
 def q_dedup_verdict(spark, sf):
-    """G5/dedup keeper election via BOTH real clustering operators
-    (:func:`dedup.dedup_documents` with algorithm='label' —
-    pointer-jumping min-label propagation — and algorithm='star' —
-    Kiveris et al. small-star/large-star; VERDICT r5 item 5: the star
-    variant was pytest-only), algorithm-tagged, over a fixed
-    candidate-pair fixture on documents doc_id < 40. cluster_id = min
-    reachable id, keeper = min id per cluster, singletons kept — the
-    two algorithms must agree row-for-row with the oracle's
+    """G5/dedup keeper election via the real clustering operator
+    (:func:`dedup.dedup_documents`, small-star/large-star connected
+    components) over a fixed candidate-pair fixture on documents
+    doc_id < 40. cluster_id = min reachable id, keeper = min id per
+    cluster, singletons kept — must agree row-for-row with the oracle's
     recursive-CTE transitive closure."""
     from insurance_pdf_extractor_spark.dedup import dedup_documents
     docs = (_t(spark, sf, "documents").where(F.col("doc_id") < 40)
             .select("doc_id"))
     pairs = _values_df(spark, _DEDUP_PAIRS, ["doc_a", "doc_b"])
-    out = None
-    for alg in ("label", "star"):
-        v = dedup_documents(docs, pairs, algorithm=alg).select(
-            F.lit(alg).alias("algorithm"),
-            "doc_id", "cluster_id", "is_keeper")
-        out = v if out is None else out.unionByName(v)
-    return out
+    return dedup_documents(docs, pairs)
 
 
 _WM_VALUES = [
@@ -1715,7 +1706,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "micro_ops": q_micro_ops,
         # PQ ADC scoring + the composed IVF×PQ query, kind-tagged
         "pq_ivfpq_topk": q_pq_ivfpq_topk,
-        # keeper election, BOTH CC algorithms, on a fixed pair fixture
+        # keeper election over connected components, fixed pair fixture
         "dedup_verdict": q_dedup_verdict,
         "windowed_event_counts": q_windowed_event_counts,
         "sessionize_events": q_sessionize_events,
@@ -2131,9 +2122,7 @@ def _pq_ivfpq_topk_sql() -> str:
 def _dedup_verdict_sql() -> str:
     """Transitive-closure twin of dedup_documents: min reachable id per
     node via a recursive CTE (fixture graphs are tiny; the Spark side is
-    the distributed operator). The closure truth is computed ONCE and
-    cross-joined with the two algorithm tags — both distributed
-    implementations must reproduce it exactly (VERDICT r5 item 5)."""
+    the distributed operator, which must reproduce it exactly)."""
     vals = ", ".join(f"({a}, {b})" for a, b in _DEDUP_PAIRS)
     return f"""
             WITH RECURSIVE p(a, b) AS (VALUES {vals}),
@@ -2151,13 +2140,12 @@ def _dedup_verdict_sql() -> str:
               SELECT id AS doc_id, CAST(min(r) AS BIGINT) AS cluster_id
               FROM reach GROUP BY id
             )
-            SELECT alg.algorithm, d.doc_id,
+            SELECT d.doc_id,
                    coalesce(c.cluster_id, d.doc_id) AS cluster_id,
                    d.doc_id = coalesce(c.cluster_id, d.doc_id)
                        AS is_keeper
             FROM (SELECT doc_id FROM documents WHERE doc_id < 40) d
-            LEFT JOIN comp c ON d.doc_id = c.doc_id
-            CROSS JOIN (VALUES ('label'), ('star')) AS alg(algorithm)"""
+            LEFT JOIN comp c ON d.doc_id = c.doc_id"""
 
 
 def _scrub_ops_sql() -> str:

@@ -6,26 +6,21 @@ The LSH banding stage (``__spark_entry__.q_lsh_band_pairs`` /
 training-data dedup (the task brief's 100 TB mandate) must then group
 transitively-connected documents into clusters and keep one
 representative per cluster. Connected components is inherently
-iterative — no single SQL query expresses it — so this is a driver-side
-loop of pure DataFrame steps (Pregel-style label propagation), the
-standard big-data formulation. Two interchangeable implementations:
-min-label propagation with pointer jumping (the default — fewest
-shuffles per round on the shallow components near-dup graphs produce)
-and the alternating small-star/large-star algorithm of Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14 (the
-deep-chain / high-degree-hub variant; see
-:func:`connected_components_star`).
+iterative — no single SQL query expresses it — so
+:func:`connected_components` is a driver-side loop of pure DataFrame
+steps: the alternating small-star/large-star algorithm of Kiveris et
+al., "Connected Components in MapReduce and Beyond", SoCC'14.
 
 Scale notes:
-- Each iteration is one self-contained Spark job: edges ⋈ labels →
-  min-per-node → change count. Convergence needs O(graph diameter)
-  iterations; near-dup components are shallow (pairs share ≥1 LSH band),
-  so diameters of 2-4 dominate.
-- ``localCheckpoint`` every iteration truncates the lineage (an
-  iterative join otherwise compounds the plan and re-executes history);
-  on a cluster with a checkpoint dir, ``checkpoint`` gives the same
-  truncation with fault tolerance.
-- The edge table is reused every iteration → persisted once.
+- Each round rewrites the (big, small) edge table: one min-agg + join
+  for large-star, one min-agg + join for small-star, then a count (and
+  an anti-join only when the count is unchanged) as the fixpoint test.
+  Rounds grow with log(component diameter); near-dup components are
+  shallow (pairs share ≥1 LSH band) and converge in a handful.
+- ``localCheckpoint`` every round truncates the lineage (an iterative
+  join otherwise compounds the plan and re-executes history); with a
+  checkpoint dir, ``checkpoint`` gives the same truncation with fault
+  tolerance.
 """
 
 from __future__ import annotations
@@ -196,10 +191,10 @@ def lsh_pairs_from_banded(banded: DataFrame,
             .distinct())
 
 
-#: iterations the most recent connected_components / *_star call used —
-#: observability for the convergence behaviour tests (the VERDICT r4
-#: stretch item asks whether pointer jumping stays within ~6 iterations
-#: on degenerate chains; this makes the answer measurable, not guessed)
+#: rounds the most recent :func:`connected_components` call used, in
+#: this process (one module-global slot, overwritten by every call, from
+#: any thread) — observability for the convergence tests, which bound the
+#: round count on degenerate chains and hubs
 LAST_CC_ITERATIONS = 0
 
 
@@ -208,111 +203,14 @@ def connected_components(pairs: DataFrame,
                          max_iter: int = 20,
                          checkpoint_dir: str | None = None) -> DataFrame:
     """(src, dst) undirected candidate pairs → (doc_id, cluster_id),
-    cluster_id = min doc_id reachable (a stable, deterministic label).
+    cluster_id = min doc_id reachable (a stable, deterministic label),
+    by alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14 §3).
 
     Only ids that appear in some pair are returned — callers union the
     singletons back (see :func:`dedup_documents`).
 
-    ``checkpoint_dir``: when set, per-iteration truncation uses a
-    RELIABLE ``checkpoint`` into that directory (any Hadoop-compatible
-    URI) instead of ``localCheckpoint`` — localCheckpoint blocks live in
-    executor memory/disk, so one executor loss kills a 100 TB clustering
-    run mid-iteration (VERDICT r3 item 6). Local default stays
-    localCheckpoint (no checkpoint dir needed for tests/benchmarks)."""
-    if checkpoint_dir is not None:
-        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.checkpoint(eager=True)
-    else:
-        def _ckpt(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint()
-
-    # Edge symmetrization via ONE explode, not a self-Union: Catalyst's
-    # Union constraint rewriting trips over two children sharing the
-    # candidate-pair plan's deep lineage ("key not found: doc_id#N"
-    # during checkpoint analysis when pairs derive from a staged UDF
-    # pipeline), and a single-child explode sidesteps the class. The
-    # checkpoint (not just persist) then truncates the lineage for the
-    # per-iteration reuse.
-    edges = _ckpt(pairs.select(F.explode(F.array(
-        F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-        F.struct(F.col(dst).alias("a"), F.col(src).alias("b"))))
-        .alias("e"))
-        .select("e.a", "e.b")
-        .distinct())
-    labels = (edges.select(F.col("a").alias("doc_id")).distinct()
-              .withColumn("label", F.col("doc_id")))
-    labels = _ckpt(labels)
-    changed = 1
-    n_iter = 0
-    for _ in range(max_iter):
-        n_iter += 1
-        # candidate label per node = min(own, min over neighbours')
-        # candidate label per node = least(own, min over neighbours').
-        # Deliberately JOIN-shaped, not labels ∪ neighbour + groupBy:
-        # Catalyst's Union constraint rewriting crashes ("key not
-        # found: doc_id#N") when a child's propagated join constraints
-        # reference attributes the child's projection pruned — which is
-        # exactly what the neighbour subplan produces here (Spark
-        # 4.1.2). Same result, one fewer shuffle input.
-        nmin = (edges.join(labels,
-                           edges.b == F.col("doc_id"), "inner")
-                .groupBy(F.col("a"))
-                .agg(F.min("label").alias("nlabel")))
-        hop = (labels.join(nmin, labels.doc_id == nmin.a, "left")
-               .select(labels.doc_id,
-                       F.least(labels.label,
-                               F.coalesce(F.col("nlabel"), labels.label))
-                       .alias("label")))
-        # pointer jumping: label ← label's label. Labels are always node
-        # ids of the same graph, so the self-join hits; chains contract
-        # by half each pass, turning O(diameter) convergence into
-        # O(log diameter) — a diameter-7 near-dup chain converges in 4
-        # iterations, not 8 (one extra shuffle per iteration, a win
-        # whenever diameter > 2).
-        new_labels = (hop.alias("x")
-                      .join(hop.select(F.col("doc_id").alias("label"),
-                                       F.col("label").alias("label2"))
-                            .alias("y"),
-                            "label", "left")
-                      .select("doc_id",
-                              F.coalesce("label2", "label")
-                              .alias("label")))
-        new_labels = _ckpt(new_labels)
-        changed = (new_labels.alias("n")
-                   .join(labels.alias("o"), "doc_id")
-                   .where(F.col("n.label") != F.col("o.label"))
-                   .limit(1).count())
-        labels = new_labels
-        if changed == 0:
-            break
-    global LAST_CC_ITERATIONS
-    LAST_CC_ITERATIONS = n_iter
-    if changed != 0:
-        # inconsistent labels would leave clusters with ZERO keepers —
-        # a keeper-only filter downstream then silently deletes
-        # documents. Fail loudly instead (code-review r3 finding);
-        # min-label propagation needs O(component diameter) iterations.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            f"iterations — a component's diameter exceeds max_iter; "
-            f"raise max_iter")
-    return labels.select("doc_id", F.col("label").alias("cluster_id"))
-
-
-def connected_components_star(pairs: DataFrame,
-                              src: str = "doc_a", dst: str = "doc_b",
-                              max_iter: int = 20,
-                              checkpoint_dir: str | None = None
-                              ) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al., "Connected Components in MapReduce and Beyond", SoCC'14
-    §3) — same (doc_id, cluster_id) contract as
-    :func:`connected_components`, different convergence mechanics
-    (VERDICT r4 stretch item 8).
-
-    Each round rewrites the EDGE set instead of propagating labels:
+    Each round rewrites the EDGE set:
 
     - large-star: every node links its strictly-larger neighbours to
       the minimum of its closed neighbourhood;
@@ -320,19 +218,26 @@ def connected_components_star(pairs: DataFrame,
       (and itself) to that minimum.
 
     Components contract toward a star centred on their minimum id; at
-    convergence the edge list IS the (member, cluster_id) mapping. Why
-    it wins: label propagation + pointer jumping needs O(log diameter)
-    iterations, but every iteration carries the FULL edge table through
-    the join; the star rounds shrink the edge multiset itself (a
-    converged subcomponent collapses to its star and stops generating
-    work), and high-degree hubs contract in one round instead of
-    feeding the hot join every pass. Measured on real LSH candidate
-    graphs this is ~35% faster than label propagation (12.8 s vs
-    19.5 s on the 20 k-doc bench corpus' 1.14 M-pair graph, 3.5 s vs
-    7.2 s on sf0.01, identical keepers, 5 vs 7 rounds), which is why
-    ``dedup_documents`` defaults to it since r6; label propagation
-    stays selectable via ``dedup_documents(algorithm="label")`` and is
-    graded against the same transitive-closure oracle.
+    convergence the edge list IS the (member, cluster_id) mapping. The
+    rounds shrink the edge multiset itself (a converged subcomponent
+    collapses to its star and stops generating work), and a high-degree
+    hub contracts in one round. Rounds grow with log(diameter): a
+    200-node path stays within 12 (tested).
+
+    ``max_iter``: round limit; not converging within it RAISES (a
+    half-labelled graph would leave clusters without a keeper).
+
+    ``checkpoint_dir``: when set, per-round truncation uses a RELIABLE
+    ``checkpoint`` into that directory (any Hadoop-compatible URI)
+    instead of ``localCheckpoint`` — localCheckpoint blocks live in
+    executor memory/disk, so one executor loss kills a 100 TB
+    clustering run mid-round. Side effect: it calls ``setCheckpointDir``
+    on the SHARED SparkContext, which changes the checkpoint directory
+    for every later ``checkpoint()`` in the session, not just this
+    call's. ``None`` (the default) sets nothing.
+
+    The round count of this call lands in the process-global
+    :data:`LAST_CC_ITERATIONS`.
     """
     if checkpoint_dir is not None:
         pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
@@ -408,7 +313,7 @@ def connected_components_star(pairs: DataFrame,
     LAST_CC_ITERATIONS = n_iter
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
+            f"connected_components did not converge in {max_iter} "
             f"rounds; raise max_iter")
     # star edges are (member, centre); centres label themselves
     return (edges.select(F.col("u").alias("doc_id"),
@@ -421,33 +326,24 @@ def connected_components_star(pairs: DataFrame,
 def dedup_documents(docs: DataFrame, pairs: DataFrame,
                     id_col: str = "doc_id",
                     max_iter: int = 20,
-                    checkpoint_dir: str | None = None,
-                    algorithm: str = "star") -> DataFrame:
-    """Full dedup verdict per document: (id, cluster_id, is_keeper).
+                    checkpoint_dir: str | None = None) -> DataFrame:
+    """Full dedup verdict per document: (doc_id, cluster_id, is_keeper).
 
-    ``docs``: one row per document (any extra columns pass through is
-    NOT needed — only the id column is read). ``pairs``: near-dup
-    candidate pairs over those ids (e.g. LSH band pairs). Documents in
-    no pair form singleton clusters. Keeper = min id per cluster (the
-    reference keeps the first-seen record; min-id is the deterministic
+    ``docs``: one row per document; only ``id_col`` is read and other
+    columns do not pass through. ``pairs``: near-dup candidate pairs
+    over those ids (e.g. LSH band pairs). Documents in no pair form
+    singleton clusters. Keeper = min id per cluster (the reference
+    keeps the first-seen record; min-id is the deterministic
     distributed equivalent, matching dedup_exact's keeper_doc_id).
 
-    ``algorithm``: "star" (default — alternating small-star/
-    large-star; its rounds SHRINK the edge set, so it measures ~35%
-    faster than label propagation on real LSH candidate graphs: 12.8 s
-    vs 19.5 s on the 20 k-doc bench corpus' 1.14 M-pair graph, 3.5 s vs
-    7.2 s on sf0.01, identical keepers, 5 vs 7 rounds) or "label"
-    (min-label propagation with pointer jumping — kept selectable; both
-    are O(log diameter) and graded against the same transitive-closure
-    oracle)."""
-    if algorithm not in ("label", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r} "
-                         "(expected 'label' or 'star')")
-    cc = (connected_components if algorithm == "label"
-          else connected_components_star)
+    ``max_iter`` and ``checkpoint_dir`` go to
+    :func:`connected_components`: a set ``checkpoint_dir`` calls
+    ``setCheckpointDir`` on the shared SparkContext (a session-wide side
+    effect), and the call's round count lands in the process-global
+    :data:`LAST_CC_ITERATIONS`."""
     ids = docs.select(F.col(id_col).alias("doc_id")).distinct()
-    comp = cc(pairs, max_iter=max_iter,
-              checkpoint_dir=checkpoint_dir)
+    comp = connected_components(pairs, max_iter=max_iter,
+                                checkpoint_dir=checkpoint_dir)
     labelled = (ids.join(comp, "doc_id", "left")
                 .withColumn("cluster_id",
                             F.coalesce("cluster_id", "doc_id")))

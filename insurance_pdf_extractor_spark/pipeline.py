@@ -165,42 +165,48 @@ def _read_table_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem serving ``path``, the Hadoop ``Path`` class), through
+    the JVM gateway — works on any storage the job can write to, where
+    driver-local ``os``/``shutil`` calls see nothing on object storage."""
+    jvm = spark.sparkContext._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    return Path(path).getFileSystem(hconf), Path
+
+
 def _hadoop_rm(spark: SparkSession, path: str) -> None:
-    """Recursive delete through the Hadoop FileSystem API (JVM gateway)
-    — works on any storage the job can write to, where a driver-local
-    ``shutil.rmtree`` silently no-ops on object storage (VERDICT r4
+    """Recursive delete through the Hadoop FileSystem API (VERDICT r4
     item 6). Cleanup of re-derivable staging data must never fail a run
     whose outputs already committed, so errors are swallowed."""
     try:
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(hconf).delete(p, True)
+        fs, Path = _hadoop_fs(spark, path)
+        fs.delete(Path(path), True)
     except Exception:
         pass
 
 
 def _recover_parked_signatures(spark: SparkSession,
-                               output_dir: str) -> None:
+                               output_dir: str) -> bool:
     """Restore a half-swapped signature compaction (ADVICE r7): a
     ``tools/dedup_job.py --compact-signatures`` that crashed between its
     two renames leaves ``signatures/`` absent and the history parked at
-    ``signatures_precompact/``, which the job's own recovery (keyed on
-    ``signatures/`` being absent) stops restoring once a run writes a
-    fresh ``signatures/``. Same rename as the job's
-    ``_recover_half_swapped``; a failed restore RAISES."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    sig = Path(os.path.join(output_dir, "signatures"))
-    parked = Path(os.path.join(output_dir, "signatures_precompact"))
-    fs = sig.getFileSystem(hconf)
-    if (not fs.exists(sig) and fs.exists(parked)
-            and not fs.rename(parked, sig)):
+    ``signatures_precompact/``; reading "no history" then would write a
+    fresh delta-only ``signatures/`` and strand the parked copy. Both
+    the pipeline's dedup runs and the job's maintenance modes call this
+    first. Returns True if it restored the parked copy; a failed restore
+    RAISES (the parked copy stays where it was)."""
+    sig = os.path.join(output_dir, "signatures")
+    parked = os.path.join(output_dir, "signatures_precompact")
+    fs, Path = _hadoop_fs(spark, sig)
+    if fs.exists(Path(sig)) or not fs.exists(Path(parked)):
+        return False
+    if not fs.rename(Path(parked), Path(sig)):
         raise RuntimeError(
             f"could not restore parked signature history "
             f"{parked} -> {sig}; refusing to proceed with an "
             f"empty-looking cross-run dedup store")
+    return True
 
 
 _LEDGER = T.StructType([T.StructField("run_id", T.StringType()),
@@ -463,7 +469,7 @@ def run_pipeline(spark: SparkSession, web_pages: DataFrame,
             # the cross-run dedup history. Restore a half-swapped
             # compaction first (ADVICE r7): reading "no history" would
             # write a fresh delta-only signatures/, after which the
-            # job-level recovery never restores the parked history.
+            # recovery (keyed on signatures/ being absent) never fires.
             _recover_parked_signatures(spark, output_dir)
             committed_bands = _read_table_if_exists(
                 spark, os.path.join(output_dir, "signatures"))

@@ -868,6 +868,94 @@ class TestSignatureStoreMaintenance:
                 if row["url"].endswith("?tw")}
         assert kept == set()
 
+    @staticmethod
+    def _small_store(spark, path):
+        """A 12-row band-partitioned signature table (no pipeline run)."""
+        (spark.createDataFrame(
+            [(f"u{i}", b, i * 7 + b) for i in range(4) for b in range(3)],
+            "doc_id string, band_no int, bh long")
+         .write.partitionBy("band_no").parquet(path))
+
+    @staticmethod
+    def _fail_rename(monkeypatch, fail_at):
+        """Route the pipeline's and the job's Hadoop FileSystem through a
+        stub whose ``fail_at``-th rename (0-based, per FileSystem
+        handle) returns False without renaming — how Hadoop's
+        ``rename`` reports failure."""
+        import tools.dedup_job as J
+        from insurance_pdf_extractor_spark import pipeline as P
+        real = P._hadoop_fs
+
+        class FailingRename:
+            def __init__(self, fs):
+                self._fs, self._renames = fs, 0
+
+            def __getattr__(self, name):
+                return getattr(self._fs, name)
+
+            def rename(self, src, dst):
+                self._renames += 1
+                if self._renames - 1 == fail_at:
+                    return False
+                return self._fs.rename(src, dst)
+
+        def stub(spark, path):
+            fs, Path = real(spark, path)
+            return FailingRename(fs), Path
+        monkeypatch.setattr(P, "_hadoop_fs", stub)
+        monkeypatch.setattr(J, "_hadoop_fs", stub)
+
+    def test_failed_restore_raises_and_keeps_parked_copy(
+            self, spark, tmp_path, monkeypatch):
+        from tools.dedup_job import compact_signatures
+        from insurance_pdf_extractor_spark.pipeline import (
+            _recover_parked_signatures)
+        out = str(tmp_path / "out")
+        sig = os.path.join(out, "signatures")
+        parked = os.path.join(out, "signatures_precompact")
+        self._small_store(spark, parked)       # the mid-swap crash state
+        self._fail_rename(monkeypatch, 0)
+        with pytest.raises(RuntimeError, match="could not restore"):
+            _recover_parked_signatures(spark, out)
+        with pytest.raises(RuntimeError, match="could not restore"):
+            compact_signatures(spark, out)
+        assert os.path.isdir(parked) and not os.path.exists(sig)
+        monkeypatch.undo()
+        assert _recover_parked_signatures(spark, out) is True
+        assert not os.path.exists(parked)
+        assert spark.read.parquet(sig).count() == 12
+        assert _recover_parked_signatures(spark, out) is False
+
+    @pytest.mark.parametrize("fail_at", [0, 1])
+    def test_compaction_failed_rename_raises_before_delete(
+            self, spark, tmp_path, monkeypatch, fail_at):
+        """A failed swap rename raises before the final delete: the
+        first (signatures → precompact) leaves the store in place and
+        nests nothing inside it; the second (compact → signatures)
+        leaves the history parked, and the next compaction restores it
+        and reports so."""
+        from tools.dedup_job import compact_signatures
+        out = str(tmp_path / "out")
+        sig = os.path.join(out, "signatures")
+        parked = os.path.join(out, "signatures_precompact")
+        self._small_store(spark, sig)
+        self._fail_rename(monkeypatch, fail_at)
+        with pytest.raises(RuntimeError, match="rename"):
+            compact_signatures(spark, out)
+        monkeypatch.undo()
+        if fail_at == 0:
+            assert not os.path.exists(
+                os.path.join(sig, "signatures_compact"))
+            assert spark.read.parquet(sig).count() == 12
+        else:
+            assert not os.path.exists(sig)
+            assert spark.read.parquet(parked).count() == 12
+        rep = compact_signatures(spark, out)
+        assert rep["recovered_half_swap"] is (fail_at == 1)
+        assert rep["rows"] == 12
+        assert spark.read.parquet(sig).count() == 12
+        assert not os.path.exists(parked)
+
     def test_backfill_makes_predup_history_visible(self, spark,
                                                    web_pages, tmp_path):
         """A doc committed by a NON-dedup run must, after

@@ -292,29 +292,21 @@ class TestR5OperatorPlans:
 
     def test_dedup_verdict_keeper_election(self, spark):
         """Fixture graph: chain 1-7, triangle 10-12, pair 20-21, star
-        30-33 → 4 multi-clusters + 30 singletons; exactly one keeper
-        (the min id) per cluster — from BOTH algorithms (r6: the graded
-        entry runs label propagation AND small-star/large-star)."""
+        30-33 → 4 multi-clusters + 24 singletons; exactly one keeper
+        (the min id) per cluster."""
         import __spark_entry__ as E
         rows = E.queries()["dedup_verdict"](spark, SF).collect()
-        assert len(rows) == 80
-        by_alg = {"label": [], "star": []}
+        assert len(rows) == 40
+        assert list(rows[0].asDict()) == ["doc_id", "cluster_id",
+                                          "is_keeper"]
+        by_cluster = {}
         for r in rows:
-            by_alg[r["algorithm"]].append(r)
-        for alg, arows in by_alg.items():
-            assert len(arows) == 40, alg
-            by_cluster = {}
-            for r in arows:
-                by_cluster.setdefault(r["cluster_id"], []).append(r)
-            for cid, members in by_cluster.items():
-                keepers = [m for m in members if m["is_keeper"]]
-                assert len(keepers) == 1 and keepers[0]["doc_id"] == cid
-            assert sorted(m["doc_id"] for m in by_cluster[1]) == [
-                1, 2, 3, 4, 5, 6, 7]
-            assert sorted(m["doc_id"] for m in by_cluster[30]) == [
-                30, 31, 32, 33]
-            assert len(by_cluster) == 28  # 4 multi + 24 singletons
-        # the two algorithms agree row-for-row
-        key = lambda r: (r["doc_id"], r["cluster_id"], r["is_keeper"])
-        assert sorted(map(key, by_alg["label"])) == sorted(
-            map(key, by_alg["star"]))
+            by_cluster.setdefault(r["cluster_id"], []).append(r)
+        for cid, members in by_cluster.items():
+            keepers = [m for m in members if m["is_keeper"]]
+            assert len(keepers) == 1 and keepers[0]["doc_id"] == cid
+        assert sorted(m["doc_id"] for m in by_cluster[1]) == [
+            1, 2, 3, 4, 5, 6, 7]
+        assert sorted(m["doc_id"] for m in by_cluster[30]) == [
+            30, 31, 32, 33]
+        assert len(by_cluster) == 28  # 4 multi + 24 singletons

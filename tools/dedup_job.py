@@ -35,9 +35,10 @@ atomic (ADVICE r6): the rewrite goes into `signatures_compact`, the
 swap is two renames with the old table parked at
 `signatures_precompact` — a crash between the renames leaves
 `signatures/` absent, which a later run would read as "no history"
-and silently lose all cross-run dedup. Both the next compaction and
-the next `--backfill-signatures` therefore auto-restore the parked
-copy before proceeding. Do NOT run pipeline appends concurrently
+and silently lose all cross-run dedup. The next compaction, the next
+`--backfill-signatures` and the next dedup pipeline run therefore
+auto-restore the parked copy before proceeding, and a swap rename
+that fails raises before anything is deleted. Do NOT run pipeline appends concurrently
 with a compaction: a delta appended between the initial read and the
 swap is dropped by the rewrite (at the Iceberg tier both become one
 optimistic-concurrency transaction and this caveat disappears).
@@ -55,6 +56,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from insurance_pdf_extractor_spark.dedup import (  # noqa: E402
     LSH_BANDS, _lsh_banded, dedup_documents, lsh_band_overflow,
     lsh_pairs_from_signatures, minhash_signatures_from_docs)
+from insurance_pdf_extractor_spark.pipeline import (  # noqa: E402
+    _hadoop_fs, _read_table_if_exists, _recover_parked_signatures)
 from insurance_pdf_extractor_spark.session import get_spark  # noqa: E402
 
 
@@ -79,32 +82,12 @@ def cluster_job(spark, docs_path: str, out_dir: str) -> dict:
             "hot_bands_dropped": n_hot}
 
 
-def _recover_half_swapped(spark, output_dir: str) -> bool:
-    """Detect and repair a compaction that crashed mid-swap (ADVICE r6):
-    ``signatures/`` absent but ``signatures_precompact/`` present means
-    the old table was renamed away and the new one never landed —
-    restore the parked copy so downstream reads see history instead of
-    silently treating the store as empty. Returns True if it repaired."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    sig = Path(os.path.join(output_dir, "signatures"))
-    old = Path(os.path.join(output_dir, "signatures_precompact"))
-    fs = sig.getFileSystem(hconf)
-    if not fs.exists(sig) and fs.exists(old):
-        fs.rename(old, sig)
-        return True
-    return False
-
-
 def backfill_signatures(spark, docs_path: str, output_dir: str) -> dict:
     """Band a committed docs table into <output_dir>/signatures once.
     Skips urls already banded (idempotent); same one-file-per-band
     compaction as the pipeline's own append. Auto-restores a
     half-swapped compaction first (see module doc)."""
-    from insurance_pdf_extractor_spark.pipeline import (
-        _read_table_if_exists)
-    _recover_half_swapped(spark, output_dir)
+    _recover_parked_signatures(spark, output_dir)
     sig_path = os.path.join(output_dir, "signatures")
     docs = (spark.read.parquet(docs_path)
             .select(F.col("url").alias("doc_id"), "text"))
@@ -124,8 +107,11 @@ def backfill_signatures(spark, docs_path: str, output_dir: str) -> dict:
 def compact_signatures(spark, output_dir: str) -> dict:
     """Rewrite <output_dir>/signatures to one file per band partition.
     Recoverable, not atomic — see module doc; restores a previous
-    half-swap before starting."""
-    recovered = _recover_half_swapped(spark, output_dir)
+    half-swap before starting. A swap rename that fails RAISES before
+    anything is deleted: the history stays at ``signatures/`` or, after
+    the first rename, parked at ``signatures_precompact/`` for the next
+    recovery."""
+    recovered = _recover_parked_signatures(spark, output_dir)
     sig_path = os.path.join(output_dir, "signatures")
     tmp_path = os.path.join(output_dir, "signatures_compact")
     old_path = os.path.join(output_dir, "signatures_precompact")
@@ -133,14 +119,19 @@ def compact_signatures(spark, output_dir: str) -> dict:
     n_rows = sig.count()
     (sig.repartition(LSH_BANDS, "band_no")
      .write.mode("overwrite").partitionBy("band_no").parquet(tmp_path))
-    # swap via Hadoop FS renames (works on any storage the job writes)
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(sig_path).getFileSystem(hconf)
+    # swap via Hadoop FS renames (works on any storage the job writes).
+    # rename reports failure by returning False, not raising: an
+    # unchecked first rename lets the second nest signatures_compact/
+    # inside signatures/, an unchecked second one lets the delete below
+    # drop the parked history.
+    fs, Path = _hadoop_fs(spark, sig_path)
     fs.delete(Path(old_path), True)
-    fs.rename(Path(sig_path), Path(old_path))
-    fs.rename(Path(tmp_path), Path(sig_path))
+    for src, dst in ((sig_path, old_path), (tmp_path, sig_path)):
+        if not fs.rename(Path(src), Path(dst)):
+            raise RuntimeError(
+                f"signature compaction: rename {src} -> {dst} failed; "
+                f"nothing deleted, the next compaction or dedup run "
+                f"restores any parked history")
     fs.delete(Path(old_path), True)
     # file-count diagnostic through the same Hadoop FS (VERDICT r6 item
     # 7: os.walk sees nothing on object storage, and -1 here would read
